@@ -32,9 +32,12 @@ object SparkEntry {
    * Memoized token-blocked part-name candidate pairs with names attached —
    * shared input of five heavy queries (q_block_pairs, q_score_pairs,
    * q_ngram_jaccard, q_affine_scores, q_threshold). The computation is
-   * deterministic, so sharing the localCheckpoint snapshot changes nothing
-   * about each query's output; without it every query re-ran the same
-   * 47M-pair generation shuffle at sf0.1 (measured ~100 s each).
+   * deterministic, so sharing the snapshot changes nothing about each
+   * query's output; without it every query re-ran the same 47M-pair
+   * generation shuffle at sf0.1 (measured ~100 s each). The memo maps are
+   * keyed by (SparkContext, dir), not session: Bench's default session
+   * and its tuned sub-session share one build, and since queries run
+   * sequentially computeIfAbsent never races a rebuild.
    */
   private val pairCache =
     new java.util.concurrent.ConcurrentHashMap[(org.apache.spark.SparkContext, String), DataFrame]()
@@ -82,52 +85,33 @@ object SparkEntry {
       r
     })
 
-  /** Parquet snapshot, NOT localCheckpoint: caching 47M rows as
-    * deserialized block-manager objects read back at ~140k rows/s vs
-    * ~3M rows/s from parquet (measured — object scan + GC of a 10 GB live
-    * set); a columnar snapshot is 20× faster to consume and is the same
-    * mechanism the pipeline's resume point uses. */
-  private def snapshot(s: SparkSession, df: DataFrame, tag: String, dir: String): DataFrame = {
-    // the memo maps are keyed by (SparkContext, dir) — round-6 change:
-    // the old (session, dir) key made Bench's default session rebuild the
-    // 47M-row pair/scored snapshots its tuned sub-session had already
-    // built (~20 s of duplicate work per round, paid by whichever
-    // default-session query sorted first). ONE snapshot per context is
-    // safe because queries run sequentially and computeIfAbsent returns
-    // the existing frame — no session ever overwrites files another
-    // session's memoized file listing still points at. The path carries
-    // the context identity so two live contexts never collide.
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_snap_${tag}_" +
-      java.lang.Integer.toHexString(dir.hashCode) + "_" +
-      java.lang.Integer.toHexString(System.identityHashCode(s.sparkContext))
-    // normalize the file layout to ~two fat-row-group files per core
-    // (measured: the 47M-row scored snapshot as 128 x 2MB files cost
-    // 1.4 s per consumer scan vs 0.7 s with fat files — per-file
-    // open/footer overhead; and one row group per file keeps ~2 effective
-    // tasks per core for comparator-heavy consumers at the 4m reader
-    // split, since a row group belongs to the split holding its midpoint.
-    // 2x cores, not 1x: the snapshot WRITE itself — dedup aggregate +
-    // parquet encode — inherits this width, and a single 32-task wave
-    // measured ~4 s slower than two waves on the 47M-pair build).
-    // coalesce, not repartition: no extra shuffle.
-    val width = s.sparkContext.defaultParallelism * 2
-    val toWrite = if (df.rdd.getNumPartitions > width) df.coalesce(width) else df
-    toWrite.write.mode("overwrite").parquet(path)
-    // reclaim at JVM exit: repeated driver/bench invocations otherwise
-    // accumulate a ~250 MB snapshot set per process in /tmp (round-6
-    // hygiene; the ADVICE temp-dir class)
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).deleteOnExit(p)
-    snapshotReader(s).read.parquet(path)
-  }
+  /** Scratch pool of the memo snapshots, reclaimed by [[clearSnapshotCaches]]. */
+  private val memoScratch = new graft.io.Snapshot.Pool
 
-  /** Drop the memoized snapshots (Bench's repeat-round protocol: both
-    * timing rounds must pay the full snapshot build, or the second
-    * round's pair queries would measure cached reads only). */
+  /** A memo snapshot, read through [[snapshotReader]]. */
+  private def snapshot(s: SparkSession, df: DataFrame, tag: String): DataFrame =
+    // ~two fat-row-group files per core (measured: the 47M-row scored
+    // snapshot as 128 x 2MB files cost 1.4 s per consumer scan vs 0.7 s
+    // with fat files — per-file open/footer overhead; and one row group per
+    // file keeps ~2 effective tasks per core for comparator-heavy consumers
+    // at the 4m reader split, since a row group belongs to the split
+    // holding its midpoint. 2x cores, not 1x: the snapshot WRITE itself —
+    // dedup aggregate + parquet encode — inherits this width, and a single
+    // 32-task wave measured ~4 s slower than two waves on the 47M-pair
+    // build). coalesce, not repartition: no extra shuffle, and a no-op on
+    // a frame that is already narrower.
+    graft.io.Snapshot(df.coalesce(s.sparkContext.defaultParallelism * 2),
+      s"memo_$tag", memoScratch, reader = Some(snapshotReader(s)))
+
+  /** Drop the memoized snapshots and reclaim their scratch (Bench's
+    * repeat-round protocol: both timing rounds must pay the full snapshot
+    * build, or the second round's pair queries would measure cached reads
+    * only). */
   private[graft] def clearSnapshotCaches(): Unit = {
     pairCache.clear()
     scoredCache.clear()
     fsCache.clear()
+    memoScratch.reclaim()
   }
 
   /** THE token blocking over part names — q_block_pairs/q_score_pairs
@@ -153,7 +137,7 @@ object SparkEntry {
       // repartition, AQE-coalesce-exempt) and the attach joins broadcast
       // the record side, so the snapshot inherits that parallelism
       snapshot(s, graft.pairs.PairGen.attachFields(pairs, recs, "id", Seq("name")),
-        "pairs", dir)
+        "pairs")
     })
 
   /** JW + Levenshtein over the memoized pairs, snapshotted ONCE — shared
@@ -179,7 +163,7 @@ object SparkEntry {
             .otherwise(lit(1.0) -
               col("lev").cast("double") / col("_maxlen").cast("double"))
             .as("lev_sim")),
-        "scored", dir)
+        "scored")
     })
 
   /** Same-nation customer self-pairs with per-side attribute columns
@@ -220,7 +204,7 @@ object SparkEntry {
           (col("seg_1") === col("seg_2")).cast("int").as("g_seg"),
           (col("n2_1") === col("n2_2")).cast("int").as("g_name2"),
           (col("pos_1") === col("pos_2")).cast("int").as("g_bal")),
-        "fsgamma", dir)
+        "fsgamma")
     })
 
   /** Shared 5-doc near-dup fixture for the minhash/simhash fixture
@@ -549,7 +533,7 @@ object SparkEntry {
       // the full-corpus features filtered to target ids — per-doc
       // grouping). Same counts, same weights, same scores; measured ~3x
       // fewer explode+census passes per query.
-      val feats = graft.pipeline.Dedupe.snapshotIfResolvable(s,
+      val feats = graft.io.Snapshot(
         Dsir.gramFeatures(docs, "doc_id", "text"), "dsir_feats")
       val model = Dsir.fitFromFeatures(
         feats.filter(col("id") % 5 === 0), feats)
@@ -564,7 +548,7 @@ object SparkEntry {
       val docs = s.read.parquet(s"$dir/documents.parquet")
         .repartition(s.sparkContext.defaultParallelism)
         .select(col("doc_id"), col("text"))
-      val feats = graft.pipeline.Dedupe.snapshotIfResolvable(s,
+      val feats = graft.io.Snapshot(
         Dsir.gramFeatures(docs, "doc_id", "text"), "dsir_feats_sel")
       val model = Dsir.fitFromFeatures(
         feats.filter(col("id") % 5 === 0), feats)
@@ -729,8 +713,8 @@ object SparkEntry {
       // and the final reassembly join, and without a materialization the
       // doc_id-partitioned final exchange cannot reuse the census
       // exchanges — the whole line-dedup/repetition/PII chain would run
-      // twice. Degrades to recompute when no scratch base resolves.
-      val red = graft.pipeline.Dedupe.snapshotIfResolvable(s,
+      // twice.
+      val red = graft.io.Snapshot(
         kept.select(col("doc_id"),
           TextOps.redactPii(col("text")).as("text")), "curate_red")
       val unioned = red.unionByName(
@@ -1299,8 +1283,8 @@ object SparkEntry {
       // one materialized prepare: the canon block census, both block-join
       // legs and the two field attaches are separate plan branches — each
       // would re-run the scan → normalize chain otherwise
-      val prepared = Dedupe.widenIfNarrow(Dedupe.ephemeralSnapshot(s,
-        Dedupe.prepare(pages).drop("html"), "gaz_prep"))
+      val prepared = graft.io.Snapshot(
+        Dedupe.prepare(pages).drop("html"), "gaz_prep", widen = true)
       val canon = prepared.filter(!col("url").endsWith("-v1"))
       val messy = prepared.filter(col("url").endsWith("-v1"))
       graft.pipeline.Gazetteer.matchRecords(s, messy, canon,
@@ -1327,8 +1311,8 @@ object SparkEntry {
     "q_gazetteer_spot" -> ((s, dir) => {
       val spotDocs = Seq(11L, 37L, 120L, 208L, 261L, 333L, 404L)
       val pages = PagesGen.fromDocuments(s, dir)
-      val prepared = Dedupe.widenIfNarrow(Dedupe.ephemeralSnapshot(s,
-        Dedupe.prepare(pages).drop("html"), "gaz_spot_prep"))
+      val prepared = graft.io.Snapshot(
+        Dedupe.prepare(pages).drop("html"), "gaz_spot_prep", widen = true)
       val canon = prepared.filter(!col("url").endsWith("-v1"))
       // messy side pre-filtered to the pinned docs: each messy record's
       // blocking, scoring, and rank-1 pick are independent of other
@@ -1389,14 +1373,15 @@ object SparkEntry {
           |  'cc_iterations', cast(ccIterations AS bigint)
           |) AS (metric, value)""".stripMargin)
       // ADVICE r5: the metrics artifacts are partition-count-sized —
-      // materialize the projected rows eagerly and remove the whole temp
-      // checkpoint dir (pairs snapshot included) instead of leaking it
-      val outRows = lineageTotal("scored_pairs").unionByName(lineageTotal("labels"))
+      // collect the projected rows to the driver and remove the whole temp
+      // checkpoint dir (pairs snapshot included) instead of leaking it; the
+      // result never re-reads the deleted files, even if a block is lost
+      val out = lineageTotal("scored_pairs").unionByName(lineageTotal("labels"))
         .unionByName(runMetrics)
         .orderBy(col("metric"))
-        .localCheckpoint(true)
-      graft.pipeline.Dedupe.deleteScratchPath(s, ckpt)
-      outRows
+      val outRows = out.collect()
+      graft.io.Snapshot.delete(s, ckpt)
+      s.createDataFrame(java.util.Arrays.asList(outRows: _*), out.schema)
     }),
 
     // T1 blocked training sampling at the real pair surface. The
@@ -1429,16 +1414,16 @@ object SparkEntry {
         .withColumn("component", pmod(col("id"), lit(37L)))
       graft.io.TableIO.writeBucketed(entities, graft.io.TableIO.Path(out),
         bucketCol = "component", numBuckets = 8)
-      // ADVICE r5: materialize the 8-row digest eagerly, then delete the
+      // ADVICE r5: collect the 8-row digest to the driver, then delete the
       // temp sink — repeated bench rounds otherwise accumulate temp dirs
       val digest = s.read.parquet(out)
         .groupBy(col("bucket").cast("long").as("bucket"))
         .agg(count(lit(1)).as("n"), sum(col("id")).as("sum_id"),
           countDistinct(col("component")).as("n_components"))
         .orderBy(col("bucket"))
-        .localCheckpoint(true)
-      graft.pipeline.Dedupe.deleteScratchPath(s, out)
-      digest
+      val rows = digest.collect()
+      graft.io.Snapshot.delete(s, out)
+      s.createDataFrame(java.util.Arrays.asList(rows: _*), digest.schema)
     }),
 
     // multimodal plumbing: batched feature extraction over binary columns.
@@ -1742,7 +1727,7 @@ object SparkEntry {
       // one aggregate action per gradient iteration, and each action on
       // the lazy plan would re-run the whole 47M-pair batch selection —
       // measured 2 × ~8 s of the query's 33 s at sf0.1
-      val labeled = graft.pipeline.Dedupe.ephemeralSnapshot(s,
+      val labeled = graft.io.Snapshot(
         batch.select("id1", "id2")
           .join(feats, Seq("id1", "id2"))
           .withColumn("y", when(col("jw") >= 0.63, 1.0).otherwise(0.0)),

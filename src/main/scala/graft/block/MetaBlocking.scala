@@ -72,11 +72,9 @@ object MetaBlocking {
    * per-record (sum, count) aggregate; nothing here is quadratic.
    *
    * `weighted` feeds TWO consumers (the node-stat aggregate + the join
-   * side); with `materializeWeights` (default) it snapshots once — a
-   * scratch parquet write AT CALL TIME, same pattern as
-   * minhashDupePairs' signatures — otherwise the full pair-stream
-   * aggregate re-executes per consumer. Degrades to the lazy plan when
-   * no scratch base is resolvable.
+   * side); with `materializeWeights` (default) it snapshots once
+   * (graft.io.Snapshot, AT CALL TIME) — otherwise the full pair-stream
+   * aggregate re-executes per consumer.
    *
    * Node stats are ONE ROW PER RECORD (~24 B each): both endpoint joins
    * against the pair stream want the stats side broadcast, never the
@@ -95,17 +93,14 @@ object MetaBlocking {
       broadcastNodes: Boolean = true): DataFrame = {
     val wdf =
       if (materializeWeights)
-        graft.pipeline.Dedupe.widenIfNarrow(
-          graft.pipeline.Dedupe.snapshotIfResolvable(
-            weighted.sparkSession, weighted, "metablock_weights"))
+        graft.io.Snapshot(weighted, "metablock_weights", widen = true)
       else weighted
     val nodesAgg = wdf
       .select(explode(array(col("id1"), col("id2"))).as("id"), col("w"))
       .groupBy("id").agg(sum(col("w")).as("s"), count(lit(1)).as("n"))
     val nodes =
       if (materializeWeights)
-        graft.pipeline.Dedupe.snapshotIfResolvable(
-          wdf.sparkSession, nodesAgg, "metablock_nodes")
+        graft.io.Snapshot(nodesAgg, "metablock_nodes")
       else nodesAgg
     def side(k: String) = {
       val renamed = nodes.withColumnsRenamed(

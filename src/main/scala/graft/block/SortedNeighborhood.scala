@@ -46,10 +46,11 @@ object SortedNeighborhood {
       .withColumn("bucket", spark_partition_id())
     // snapshot REQUIRED, not best-effort: RangePartitioner's sampled
     // bounds are not contractually stable across jobs, so the census and
-    // the window below must read the SAME materialized bucket tags — a
-    // silent recompute fallback could count a boundary row in bucket k
-    // and rank it in bucket k+1, corrupting every downstream rank
-    val b = graft.pipeline.Dedupe.snapshotRequired(spark, ranged, "snm_rank_in")
+    // the window below must read the SAME materialized bucket tags — the
+    // cached fallback can be evicted and recomputed, and could then count
+    // a boundary row in bucket k and rank it in bucket k+1, corrupting
+    // every downstream rank
+    val b = graft.io.Snapshot(ranged, "snm_rank_in", required = true)
     val (offDf, census) = graft.pipeline.Dedupe.exclusiveBucketOffsets(
       b, "bucket", count(lit(1)),
       Seq(sum(when(col("id").isNull, 1L).otherwise(0L)).as("null_ids"),
@@ -76,10 +77,9 @@ object SortedNeighborhood {
             window: Int, buckets: Int = 0): DataFrame = {
     require(window >= 2, s"window must be >= 2: $window")
     // ranked feeds BOTH join branches — snapshot it once (best-effort:
-    // with the rank input materialized above, a recompute fallback is
-    // merely slower, not wrong)
-    val ranked = graft.pipeline.Dedupe.snapshotIfResolvable(
-      records.sparkSession, withGlobalRank(records, idCol, key, buckets),
+    // with the rank input materialized above, a recompute is merely
+    // slower, not wrong)
+    val ranked = graft.io.Snapshot(withGlobalRank(records, idCol, key, buckets),
       "snm_ranked")
     val left = ranked
       .select(col("id").as("lid"), col("rank"))

@@ -63,10 +63,13 @@ object ConnectedComponents {
     CCResult(labelsFromFixpoint(fixpoint), iter)
   }
 
-  /** Canonical simple edge frame (u < v, no self-loops, distinct). */
+  /** Canonical simple edge frame (u < v, no self-loops, distinct) of long
+    * ids — so [[run]] and [[labels]] emit one label schema whatever the
+    * input's numeric type. */
   private def normalize(edges: DataFrame): DataFrame =
     edges.toDF("u", "v")
-      .select(least(col("u"), col("v")).as("u"), greatest(col("u"), col("v")).as("v"))
+      .select(least(col("u"), col("v")).cast("long").as("u"),
+        greatest(col("u"), col("v")).cast("long").as("v"))
       .filter(col("u") =!= col("v"))
       .distinct()
 

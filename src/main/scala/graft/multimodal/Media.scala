@@ -325,24 +325,17 @@ object Media {
    * collision to prove it). Output: (modality, id1, id2, hamming,
    * frames_matched) — hamming is the video pair's min over matched
    * frames, frames_matched is 1 for image/audio. The signature table is
-   * persisted before the three joins branch from it: it is ~20 B/row
+   * snapshotted before the three joins branch from it: it is ~20 B/row
    * while decode is the dominant cost, so one decode pass serves all
-   * modalities (at crawl scale you'd checkpoint it; MEMORY_AND_DISK
-   * keeps the library free of a filesystem contract).
+   * modalities.
    */
   def nearDupPairs(media: DataFrame, bands: Int = 4, maxHamming: Int = 3,
       maxBucketSize: Int = 1000, comboBlocks: Int = 0,
       maxFrames: Int = VideoHash.defaultMaxFrames,
       minFramesMatched: Int = 1): DataFrame = {
-    // ADVICE r5: the signature table used to be persist(MEMORY_AND_DISK)
-    // and was never unpersisted — repeated calls pinned cached blocks for
-    // the session lifetime. A scratch-parquet snapshot (the library's
-    // standard multi-consumer idiom, same as minhashDupePairs) keeps the
-    // one-decode-pass property without the block-manager leak: the path
-    // is registered for Dedupe.reclaimLibraryScratch / JVM-exit cleanup.
-    val sigs = graft.pipeline.Dedupe.widenIfNarrow(
-      graft.pipeline.Dedupe.snapshotIfResolvable(
-        media.sparkSession, signatureTable(media, maxFrames), "media_sigs"))
+    // reclaimed with Dedupe.reclaimLibraryScratch
+    val sigs = graft.io.Snapshot(signatureTable(media, maxFrames), "media_sigs",
+      widen = true)
     def kernel(subset: DataFrame) = graft.textops.TextOps.hammingNearDupPairs(
       subset, bands, maxHamming, maxBucketSize, comboBlocks)
     def flat(modality: String) =

@@ -60,18 +60,14 @@ object SetSimJoin {
     // (df, tok) key is)
     // `sorted` feeds THREE consumers (the prefix explode + both sides of
     // attachFields) and the census inside the grid join re-reads blocks —
-    // snapshot once (same multi-consumer pattern and mechanism as
-    // MetaBlocking.wnpPrune); degrades to the lazy plan when no scratch
-    // base is resolvable
-    val sorted = graft.pipeline.Dedupe.widenIfNarrow(
-      graft.pipeline.Dedupe.snapshotIfResolvable(
-      toks.sparkSession,
+    // snapshot once
+    val sorted = graft.io.Snapshot(
       exploded.join(dfreq, "tok")
         .groupBy("id")
         .agg(transform(array_sort(collect_list(struct(col("df"), col("tok")))),
           x => x.getField("tok")).as("stoks"))
         .withColumn("len", size(col("stoks")).cast("long")),
-      "ssjoin_sorted"))
+      "ssjoin_sorted", widen = true)
     // prefix length |t| − ⌈θ|t|⌉ + 1, ⌈⌉ in integer arithmetic
     val prefixLen = (col("len") - floor((p * col("len") + q - lit(1L)) / q) + lit(1L))
       .cast("int")

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.gfunctions._
 import graft.block.Blocking
 import graft.cluster.{Canonicalize, ConnectedComponents}
+import graft.io.Snapshot
 import graft.model.Model
 import graft.pairs.PairGen
 import graft.score.Scoring
@@ -75,102 +76,6 @@ object Dedupe {
       ccIterations: Int)
 
   /**
-   * Scratch base for ephemeral snapshots. Precedence: an explicit
-   * `spark.graft.scratchDir` (any Hadoop-FS URI — hdfs://, s3a://, ...);
-   * otherwise the driver-local java.io.tmpdir, which is only correct under
-   * a local master — on a multi-node cluster executors would write
-   * partitions to their own local disks and the read-back sees garbage
-   * (the same failure class resumeFromPairs guards against), so fail fast
-   * instead of producing wrong data.
-   */
-  private[graft] def resolveScratchBase(master: String,
-      configured: Option[String]): String =
-    configured.getOrElse {
-      require(master.startsWith("local"),
-        s"master '$master' needs a shared-FS scratch: set spark.graft.scratchDir " +
-          "(or Config.checkpointDir for pipeline runs) to an hdfs://-style URI")
-      "file:" + System.getProperty("java.io.tmpdir")
-    }
-
-  /**
-   * Ephemeral parquet snapshot: materialize `df` once on a shared FS and
-   * read it back, so a frame consumed by several downstream actions does
-   * not re-execute its whole DAG per consumer. Parquet, NOT
-   * localCheckpoint: a deserialized block cache of tens of millions of
-   * rows reads back ~20× slower than a columnar snapshot (measured) and
-   * pins the heap. The directory is removed on JVM exit (Hadoop-FS
-   * deleteOnExit — works for remote FS schemes too).
-   */
-  private[graft] def ephemeralSnapshot(spark: SparkSession, df: DataFrame,
-      tag: String, scratchBase: Option[String] = None,
-      registerDeleteOnExit: Boolean = true): DataFrame =
-    ephemeralSnapshotWithPath(spark, df, tag, scratchBase, registerDeleteOnExit)._1
-
-  /** [[ephemeralSnapshot]] that also returns the written path, for callers
-    * that reclaim the snapshot themselves once consumers are done. */
-  private[graft] def ephemeralSnapshotWithPath(spark: SparkSession, df: DataFrame,
-      tag: String, scratchBase: Option[String] = None,
-      registerDeleteOnExit: Boolean = true): (DataFrame, String) = {
-    val base = resolveScratchBase(spark.sparkContext.master,
-      scratchBase.orElse(
-        spark.conf.getOption("spark.graft.scratchDir").filter(_.nonEmpty)))
-    val path = new org.apache.hadoop.fs.Path(base,
-      s"graft_${tag}_${java.util.UUID.randomUUID().toString.take(12)}")
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    df.write.mode("overwrite").parquet(path.toString)
-    // callers that group several snapshots under one per-run dir register
-    // THAT dir instead (one registry entry per run, not per snapshot)
-    if (registerDeleteOnExit) fs.deleteOnExit(path)
-    (spark.read.parquet(path.toString), path.toString)
-  }
-
-  /** Delete one scratch path (see [[cleanupScratch]] for the Result form). */
-  private[graft] def deleteScratchPath(spark: SparkSession, path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-    ()
-  }
-
-  /** ephemeralSnapshot when a scratch base is resolvable, the input
-    * unchanged otherwise — for library transformations (the TextOps dupe-
-    * pair builders) where a missing scratch conf on a non-local master
-    * must degrade to recompute-per-consumer, not throw at plan-build time.
-    * Every path taken here is also recorded for [[reclaimLibraryScratch]]
-    * so long-lived drivers can reclaim between logical runs instead of
-    * waiting for JVM-exit deleteOnExit. */
-  private[graft] def snapshotIfResolvable(spark: SparkSession, df: DataFrame,
-      tag: String): DataFrame =
-    scala.util.Try(resolveScratchBase(spark.sparkContext.master,
-        spark.conf.getOption("spark.graft.scratchDir").filter(_.nonEmpty)))
-      .toOption
-      .map { base =>
-        val (out, path) = ephemeralSnapshotWithPath(spark, df, tag, Some(base))
-        librarySnapshots.synchronized { librarySnapshots += path }
-        out
-      }
-      .getOrElse(df)
-
-  /** [[snapshotIfResolvable]] for callers whose CORRECTNESS (not just
-    * cost) depends on the materialization — e.g. a census and a
-    * downstream job that must observe the same nondeterministic
-    * partition assignment. Throws with remediation instead of silently
-    * degrading to recompute-per-consumer. */
-  private[graft] def snapshotRequired(spark: SparkSession, df: DataFrame,
-      tag: String): DataFrame =
-    scala.util.Try(resolveScratchBase(spark.sparkContext.master,
-        spark.conf.getOption("spark.graft.scratchDir").filter(_.nonEmpty)))
-      .toOption
-      .map { base =>
-        val (out, path) = ephemeralSnapshotWithPath(spark, df, tag, Some(base))
-        librarySnapshots.synchronized { librarySnapshots += path }
-        out
-      }
-      .getOrElse(throw new IllegalStateException(
-        s"$tag requires a materialized scratch snapshot (two jobs must see " +
-        "the same partition assignment); set spark.graft.scratchDir to a " +
-        "shared-FS path, or run on a local master"))
-
-  /**
    * The bounded-census exclusive-prefix recipe shared by the
    * distributed prefix-sum operators (TextOps.packShards,
    * SortedNeighborhood.withGlobalRank): aggregate one `weight` per
@@ -202,46 +107,21 @@ object Dedupe {
   }
 
   /**
-   * Scan-parallelism floor for SNAPSHOT READS (round-6; the same idiom as
-   * the raw-pages floor in runInternal): a small scratch snapshot written
-   * as N tiny files packs into 1-2 read splits under the 128m default, and
-   * every downstream per-row kernel (tokenize, simhash, comparators, the
-   * 2x explode feeding a census) then runs on 1-2 threads regardless of
-   * cores. One cheap shuffle of the small frame restores full width; a
-   * snapshot that already scans wide (the 100 TB case — thousands of
-   * splits) passes through untouched, so nothing is added at scale.
-   * Round-robin repartition only — callers are all row-order-insensitive.
-   */
-  private[graft] def widenIfNarrow(df: DataFrame): DataFrame = {
-    val width = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < width) df.repartition(width) else df
-  }
-
-  private val librarySnapshots = scala.collection.mutable.ListBuffer[String]()
-
-  /**
-   * Delete every scratch snapshot the TextOps-style library operators
-   * (minhash/simhash/span dedup, packShards, dedupeAgainstCorpus without
-   * the hash-col seams) have written so far in this JVM. deleteOnExit
+   * Delete every scratch snapshot the library operators (minhash/simhash/
+   * span dedup, packShards, dedupeAgainstCorpus without the hash-col
+   * seams, ...) have taken so far in this JVM, and unpersist their
+   * no-scratch fallbacks ([[graft.io.Snapshot.library]]). deleteOnExit
    * only reclaims at exit, so a long-lived driver (service, streaming
    * job, repeated Bench rounds) calling these operators repeatedly leaks
    * an input-sized dir per call until it invokes this between logical
    * runs — ONLY when no DataFrame returned by those operators is still
-   * to be consumed (they read from these paths lazily). The registry is
+   * to be consumed (they read from these paths lazily). The pool is
    * JVM-global: a driver interleaving CONCURRENT logical runs must not
    * call this mid-flight (it would delete the other run's live
    * snapshots) — serialize reclamation, or use the per-run
-   * `cleanupScratch(Result)` handle for pipeline runs. A path is
-   * unregistered only AFTER its delete succeeds, so a transient FS
-   * failure leaves the remainder registered for a retry.
+   * `cleanupScratch(Result)` handle for pipeline runs.
    */
-  def reclaimLibraryScratch(spark: SparkSession): Unit = {
-    val paths = librarySnapshots.synchronized { librarySnapshots.toList }
-    paths.foreach { p =>
-      deleteScratchPath(spark, p)
-      librarySnapshots.synchronized { librarySnapshots -= p }
-    }
-  }
+  def reclaimLibraryScratch(spark: SparkSession): Unit = Snapshot.library.reclaim()
 
   /**
    * Delete a run's ephemeral scratch directory (`Result.scratchDir`).
@@ -251,7 +131,7 @@ object Dedupe {
    * this — the deleteOnExit fallback only reclaims space at JVM exit.
    */
   def cleanupScratch(spark: SparkSession, result: Result): Unit =
-    result.scratchDir.foreach(deleteScratchPath(spark, _))
+    result.scratchDir.foreach(Snapshot.delete(spark, _))
 
   /**
    * Per-partition lineage metrics (S5; BASELINE.json:14 "per-partition
@@ -284,7 +164,7 @@ object Dedupe {
     val fs = pairsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(fs.exists(pairsPath), s"no pairs snapshot at $dir/pairs")
     runInternal(spark, pages, config,
-      Some(widenIfNarrow(spark.read.parquet(s"$dir/pairs"))))
+      Some(Snapshot.widen(spark.read.parquet(s"$dir/pairs"))))
   }
 
   /** Derived columns over the north-rule pages schema
@@ -349,33 +229,12 @@ object Dedupe {
   private def runBody(spark: SparkSession, pages: DataFrame, config: Config,
       resumeScored: Option[DataFrame]): Result = {
     val model = config.model
-    // ephemeral snapshots land under the checkpoint dir when one is set —
-    // a cluster run with Config.checkpointDir needs no extra scratch conf.
-    // All of a run's snapshots share ONE per-run directory: one
-    // deleteOnExit registration (not one per snapshot), and the caller can
-    // reclaim it early via cleanupScratch(Result.scratchDir) — a service
-    // or streaming driver calling run() per request would otherwise
-    // accumulate input-sized scratch for the JVM's lifetime. Resolved
-    // lazily: a run that takes no snapshot must not demand a scratch conf.
-    var scratchUsed: Option[String] = None
-    lazy val runScratch: String = {
-      val base = resolveScratchBase(spark.sparkContext.master,
-        config.checkpointDir.map(d => s"$d/scratch").orElse(
-          spark.conf.getOption("spark.graft.scratchDir").filter(_.nonEmpty)))
-      val p = new org.apache.hadoop.fs.Path(base,
-        s"graft_run_${java.util.UUID.randomUUID().toString.take(12)}")
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).deleteOnExit(p)
-      scratchUsed = Some(p.toString)
-      p.toString
-    }
-    def snap(df: DataFrame, tag: String): DataFrame = {
-      // §1.5 job labels: the pipeline runs many small jobs; the tag makes
-      // per-stage cost attributable in the UI / listener profiles
-      spark.sparkContext.setJobDescription(s"graft: $tag snapshot")
-      try widenIfNarrow(ephemeralSnapshot(spark, df, tag, Some(runScratch),
-        registerDeleteOnExit = false))
-      finally spark.sparkContext.setJobDescription(null)
-    }
+    // a run's snapshots share ONE directory, under the checkpoint dir when
+    // one is set (a cluster run with Config.checkpointDir needs no extra
+    // scratch conf); the caller reclaims it via cleanupScratch — a service
+    // calling run() per request would otherwise accumulate input-sized
+    // scratch for the JVM's lifetime
+    val scratch = new Snapshot.Run(config.checkpointDir.map(d => s"$d/scratch"))
 
     // ---- stage 1: prepare + exact pre-group (G1)
     // Scan-parallelism floor: the per-row prepare/blocking work (NFKC,
@@ -410,7 +269,8 @@ object Dedupe {
       requiredFields(model.featureNames).contains("html")
     val prepared =
       if (!config.materializePrepared) withRep
-      else snap(if (htmlNeeded) withRep else withRep.drop("html"), "prepared")
+      else Snapshot(if (htmlNeeded) withRep else withRep.drop("html"), "prepared",
+        scratch, widen = true)
 
     val idToRep = prepared.select(col("id"), col("rep"))
     val reps0 = prepared.filter(col("id") === col("rep"))
@@ -429,7 +289,7 @@ object Dedupe {
     }
     val reps =
       if (tfidfFields.isEmpty || !config.materializePrepared) repsTf
-      else snap(repsTf, "reps_tfidf")
+      else Snapshot(repsTf, "reps_tfidf", scratch, widen = true)
 
     // ---- stages 2+3 (skipped entirely on resume): blocking (narrow) +
     // pair-gen (the shuffle) + attach fields + score (one codegen span)
@@ -441,8 +301,9 @@ object Dedupe {
         // of the grid self-join — three evaluations that would each re-run
         // NFKC + tokenize + simhash over every record. The reference
         // materializes its block table the same way (Postgres block_{sid}
-        // table†); here it's a scratch parquet of narrow (id, key) rows.
-        val blocks = snap(Blocking.blockingMap(reps, model.predicates, "id"), "blocks")
+        // table†); here it's a snapshot of narrow (id, key) rows.
+        val blocks = Snapshot(Blocking.blockingMap(reps, model.predicates, "id"),
+          "blocks", scratch, widen = true)
         if (config.collectMetrics)
           blockM = PairGen.blockMetrics(blocks, config.maxBlockSize)
         val pairs = PairGen.candidatePairs(blocks, config.maxBlockSize)
@@ -463,16 +324,16 @@ object Dedupe {
         config.checkpointDir match {
           case Some(dir) => // resume point (BASELINE.json:6)
             scored0.write.mode("overwrite").parquet(s"$dir/pairs")
-            val snap = spark.read.parquet(s"$dir/pairs")
+            val pairs = spark.read.parquet(s"$dir/pairs")
             // S5: per-partition lineage of the resume point, persisted
             // alongside it (cheap: one columnar count over the snapshot)
-            writeLineage(dir, "scored_pairs", snap)
-            widenIfNarrow(snap)
+            writeLineage(dir, "scored_pairs", pairs)
+            Snapshot.widen(pairs)
           case None =>
             // scored pairs feed TWO downstream consumers (CC edges +
             // per-record confidences); without a snapshot the whole
             // block+join+score DAG would re-execute per consumer.
-            snap(scored0, "scored_snap")
+            Snapshot(scored0, "scored_snap", scratch, widen = true)
         }
     }
 
@@ -508,7 +369,8 @@ object Dedupe {
     val allLabels0 = idToRep.join(repLabels, "rep")
       .select(col("id"), col("component"))
     val allLabels =
-      if (config.materializePrepared) snap(allLabels0, "labels")
+      if (config.materializePrepared)
+        Snapshot(allLabels0, "labels", scratch, widen = true)
       else allLabels0
     // S5: lineage of the clustering output too (CC iterations checkpoint
     // under $dir/cc; this records what the final labels looked like)
@@ -551,6 +413,6 @@ object Dedupe {
       Seq(m).toDF().write.mode("overwrite").parquet(s"$dir/metrics/run")
     }
 
-    Result(entityMap, canon, scored, m, scratchUsed)
+    Result(entityMap, canon, scored, m, scratch.dir)
   }
 }

@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.block.Blocking
+import graft.io.Snapshot
 import graft.model.Model
 import graft.pairs.PairGen
 import graft.score.Scoring
@@ -158,14 +159,13 @@ object Gazetteer {
     // the 185 s q_dedupe_canon anomaly, round-2 verdict item 4).
     // scratch lands under the checkpoint dir when one is set, so a cluster
     // run configured only with Config.checkpointDir works here too
-    val (canonPages, canonPagesPath) = Dedupe.ephemeralSnapshotWithPath(
-      spark, canon.select(
+    val scratch = new Snapshot.Run(config.checkpointDir.map(d => s"$d/scratch"))
+    val canonPages = Snapshot(canon.select(
         concat(lit("canon://"), col("component")).as("url"),
         lit(null).cast("timestamp").as("warc_ts"),
         lit(null).cast("binary").as("html"),
         col("text_norm").as("text"),
-        col("lang")), "canon_pages",
-      config.checkpointDir.map(d => s"$d/scratch"))
+        col("lang")), "canon_pages", scratch)
     // the inner run gets a DERIVED checkpoint dir: with the caller's dir
     // unmodified it would overwrite $dir/pairs (the FIRST pass's resume
     // snapshot — a later resumeFromPairs would silently resume from
@@ -190,7 +190,7 @@ object Gazetteer {
       // from the scratch we are about to delete
       val truncated = out.localCheckpoint(true)
       Dedupe.cleanupScratch(spark, second)
-      Dedupe.deleteScratchPath(spark, canonPagesPath)
+      scratch.reclaim()
       truncated
     }
   }

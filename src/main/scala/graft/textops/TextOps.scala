@@ -432,8 +432,7 @@ object TextOps {
     val bh = batchHashCol match {
       case Some(hc) => batch.filter(col(hc).isNotNull)
         .select(col(idCol).as("id"), col(hc).as("th"))
-      case None => graft.pipeline.Dedupe.snapshotIfResolvable(
-        batch.sparkSession,
+      case None => graft.io.Snapshot(
         batch.filter(col(textCol).isNotNull)
           .select(col(idCol).as("id"), th(col(textCol)).as("th")),
         "incr_dedup_batch")
@@ -587,12 +586,11 @@ object TextOps {
   def minhashDupePairs(df: DataFrame, idCol: String, textCol: String,
       k: Int = 64, bands: Int = 16, jaccardThreshold: Double = 0.7,
       maxBucketSize: Int = 200,
-      // materialize the signature frame eagerly (a scratch parquet write
-      // AT CALL TIME): it feeds the block census, both legs of the grid
+      // materialize the signature frame eagerly (a scratch snapshot AT
+      // CALL TIME): it feeds the block census, both legs of the grid
       // self-join and the verify attach — without it the CPU-heavy
-      // signature computation re-executes per consumer (~4×). Degrades to
-      // the lazy recompute plan when no scratch base is resolvable
-      // (non-local master without spark.graft.scratchDir) or when false.
+      // signature computation re-executes per consumer (~4×). false keeps
+      // the lazy recompute plan.
       materializeSignatures: Boolean = true): DataFrame = {
     require(k % bands == 0, "k must divide into bands")
     val sigs = df.select(
@@ -601,8 +599,7 @@ object TextOps {
       .withColumn("sig", minhash(col("shingles"), k))
     val shingled =
       if (materializeSignatures)
-        graft.pipeline.Dedupe.widenIfNarrow(
-          graft.pipeline.Dedupe.snapshotIfResolvable(df.sparkSession, sigs, "minhash_sigs"))
+        graft.io.Snapshot(sigs, "minhash_sigs", widen = true)
       else sigs
     // band keys via THE shared definition (minhashBandKeys), so the
     // incremental index and the batch operator cannot desynchronize
@@ -721,9 +718,7 @@ object TextOps {
       // with the same k/bands.
       corpusIndex: Option[DataFrame] = None): DataFrame = {
     require(k % bands == 0, "k must divide into bands")
-    val spark = batch.sparkSession
-    val bSigs = graft.pipeline.Dedupe.snapshotIfResolvable(
-      spark, minhashSignatures(batch, idCol, textCol, k),
+    val bSigs = graft.io.Snapshot(minhashSignatures(batch, idCol, textCol, k),
       "incr_neardup_batch")
     val bKeys = minhashBandKeys(bSigs, k, bands)
       .withColumnsRenamed(Map("id" -> "bid"))
@@ -731,7 +726,7 @@ object TextOps {
       minhashBandKeys(corpusSigs, k, bands, carrySig = true))
     // (2) probe — the one corpus access; snapshot the (batch-bounded)
     // result so the census, candidate build and scoring don't re-run it
-    val probed = graft.pipeline.Dedupe.snapshotIfResolvable(spark,
+    val probed = graft.io.Snapshot(
       cKeys.join(broadcast(bKeys.select("block_key").distinct()),
         Seq("block_key")),
       "incr_neardup_probe")
@@ -902,9 +897,7 @@ object TextOps {
       regexp_extract_all(col(textCol), lit(runPattern), lit(0)).as("runs"))
       .withColumn("ts", transform(
         filter(col("runs"), r => isTok(r)), r => lower(r)))
-    val base = graft.pipeline.Dedupe.widenIfNarrow(
-      graft.pipeline.Dedupe.snapshotIfResolvable(df.sparkSession,
-        base0, "span_runs"))
+    val base = graft.io.Snapshot(base0, "span_runs", widen = true)
     // one gram per starting token position; docs shorter than k emit none
     val gramArr = when(size(col("ts")) < k, array().cast("array<string>"))
       .otherwise(transform(sequence(lit(0), size(col("ts")) - k),
@@ -979,11 +972,10 @@ object TextOps {
     require(targetTokens > 0 && bucketWidth > 0,
       s"need positive targetTokens/bucketWidth: $targetTokens, $bucketWidth")
     import org.apache.spark.sql.expressions.Window
-    val spark = df.sparkSession
     // snapshot: the census job and the final join both consume this
     // projection, so without it the (possibly expensive — q_pack_shards
     // tokenizes every document) upstream lineage would execute twice
-    val b = graft.pipeline.Dedupe.snapshotIfResolvable(spark,
+    val b = graft.io.Snapshot(
       df.select(col(idCol).as("id"), col(nTokCol).cast("long").as("n_tok"))
         .withColumn("bucket", expr(s"id div ${bucketWidth}L")),
       "pack_shards_in")
@@ -1141,8 +1133,7 @@ object TextOps {
       simhash64(tokens(lower(col(textCol)))).as("sh"))
     val withHash =
       if (materializeSignatures)
-        graft.pipeline.Dedupe.widenIfNarrow(
-          graft.pipeline.Dedupe.snapshotIfResolvable(df.sparkSession, sigs, "simhash_sigs"))
+        graft.io.Snapshot(sigs, "simhash_sigs", widen = true)
       else sigs
     hammingNearDupPairs(withHash, bands, maxHamming, maxBucketSize, comboBlocks)
   }

@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.fixtures.PagesGen
+import graft.io.Snapshot
 import graft.pipeline.{Dedupe, Gazetteer}
 
 /** Stage-level timing of the gazetteer match path (scratch diagnostics). */
@@ -27,7 +28,7 @@ object GazProfile {
     val pages = PagesGen.fromDocuments(spark, sfDir)
     var prepared: DataFrame = null
     t("prepare_snap") {
-      prepared = Dedupe.ephemeralSnapshot(spark, Dedupe.prepare(pages).drop("html"), "gp")
+      prepared = Snapshot(Dedupe.prepare(pages).drop("html"), "gp")
     }
     val canon = prepared.filter(!col("url").endsWith("-v1"))
     val messy = prepared.filter(col("url").endsWith("-v1"))
@@ -39,7 +40,7 @@ object GazProfile {
       .withColumnRenamed("id", "messy_id")
     var pairs: DataFrame = null
     t("pairs") {
-      pairs = Dedupe.ephemeralSnapshot(spark, messyBlocks.join(broadcast(index.blocks), "block_key")
+      pairs = Snapshot(messyBlocks.join(broadcast(index.blocks), "block_key")
         .select(col("messy_id").as("id1"), col("canon_id").as("id2"))
         .dropDuplicates("id1", "id2"), "gp_pairs")
       println("GAZPROF n_pairs=" + pairs.count())
@@ -49,7 +50,7 @@ object GazProfile {
     val attached = pairs.join(m, "id1").join(broadcast(index.fields), "id2")
     var scored: DataFrame = null
     t("score") {
-      scored = Dedupe.ephemeralSnapshot(spark,
+      scored = Snapshot(
         graft.score.Scoring.scorePairs(attached, model).filter(col("score") >= model.threshold), "gp_scored")
     }
     t("rank") {

@@ -41,7 +41,7 @@ object IncrProbe {
       TextOps.neardupAgainstCorpus(batch, corpusSigs, "doc_id", "text")
         .write.format("noop").mode("overwrite").save()
     }
-    // the operator's state is snapshotIfResolvable scratch, reclaimed
+    // the operator's state is library-pool scratch, reclaimed
     // here (SparkEntry's pairCache/scoredCache are never populated by
     // this probe, so clearing those would be a no-op)
     graft.pipeline.Dedupe.reclaimLibraryScratch(spark)

@@ -108,4 +108,19 @@ class CCSpec extends SparkSpec {
     assert(Set(capped(3L), capped(4L), capped(5L)).size == 3)
     assert(capped(3L) != capped(1L))
   }
+
+  test("run().labels and labels() share one long label schema on int ids") {
+    // names and types (nullability follows the labeling path taken)
+    def cols(df: org.apache.spark.sql.DataFrame) =
+      df.schema.map(f => f.name -> f.dataType.typeName)
+    for (t <- Seq("int", "decimal(20,0)")) {
+      val edges = Seq((1, 2), (2, 3), (7, 8)).toDF("id1", "id2")
+        .select($"id1".cast(t), $"id2".cast(t))
+      val viaRun = ConnectedComponents.run(edges).labels
+      val viaLabels = ConnectedComponents.labels(edges)
+      assert(cols(viaRun) == cols(viaLabels), t)
+      assert(cols(viaRun) == Seq("id" -> "long", "component" -> "long"), t)
+      assert(viaRun.collect().toSet == viaLabels.collect().toSet, t)
+    }
+  }
 }

@@ -79,7 +79,7 @@ class PlanSpec extends SparkSpec {
     // Two nets: the returned frame's plan (the tail), AND a
     // QueryExecutionListener capturing every plan EXECUTED during
     // construction — queries that eagerly materialize via
-    // ephemeralSnapshot run their block/score/CC stages before returning,
+    // graft.io.Snapshot run their block/score/CC stages before returning,
     // so the tail plan alone would never see a cartesian hidden in those
     // interior stages.
     import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.fixtures.PagesGen
+import graft.io.Snapshot
 import graft.pipeline.Dedupe
 
 /** Resumability contract (BASELINE.json:6,14): the pipeline restarts from
@@ -83,26 +84,26 @@ class ResumeSpec extends SparkSpec {
   test("ephemeral snapshots resolve to a shared-FS scratch, never a " +
       "driver-local default on a non-local master") {
     // explicit scratch dir wins regardless of master
-    assert(Dedupe.resolveScratchBase("spark://host:7077",
-      Some("hdfs:///scratch")) == "hdfs:///scratch")
+    assert(Snapshot.resolveBase("spark://host:7077",
+      Some("hdfs:///scratch")).contains("hdfs:///scratch"))
     // local master may fall back to the driver-local tmpdir
-    assert(Dedupe.resolveScratchBase("local[4]", None)
-      .startsWith("file:"))
-    // a cluster master without a shared scratch must fail fast — executors
-    // writing to their own local disks is silent data corruption
-    intercept[IllegalArgumentException] {
-      Dedupe.resolveScratchBase("spark://host:7077", None)
-    }
-    intercept[IllegalArgumentException] {
-      Dedupe.resolveScratchBase("yarn", None)
+    assert(Snapshot.resolveBase("local[4]", None).exists(_.startsWith("file:")))
+    // a cluster master without a shared scratch resolves NO base —
+    // executors writing to their own local disks is silent data
+    // corruption — and a run scope fails fast there
+    assert(Snapshot.resolveBase("spark://host:7077", None).isEmpty)
+    assert(Snapshot.resolveBase("yarn", None).isEmpty)
+    import spark.implicits._
+    val df = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
+    intercept[IllegalStateException] {
+      Snapshot.under("yarn", df, "testsnap", new Snapshot.Run(None),
+        required = false, widen = false, reader = None)
     }
     // end-to-end: with spark.graft.scratchDir set, the snapshot lands there
     val scratch = java.nio.file.Files.createTempDirectory("graft_scratch").toString
     spark.conf.set("spark.graft.scratchDir", scratch)
     try {
-      import spark.implicits._
-      val back = Dedupe.ephemeralSnapshot(spark,
-        Seq((1L, "a"), (2L, "b")).toDF("id", "v"), "testsnap")
+      val back = Snapshot(df, "testsnap")
       assert(back.count() == 2)
       val staged = new java.io.File(scratch).listFiles()
         .filter(_.getName.startsWith("graft_testsnap_"))
