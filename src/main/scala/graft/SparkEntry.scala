@@ -998,7 +998,8 @@ object SparkEntry {
     "q_incr_neardup" -> ((s, dir) => {
       import graft.textops.TextOps
       // no scan-widening repartition here: the signature kernel is cheap
-      // (~0.3 s over this corpus, measured via tools.SigProbe) and the
+      // (~0.3 s over this corpus, measured by the since-removed
+      // tools.SigProbe main, kept in git history) and the
       // multi-KB text shuffle re-executes in every snapshot job, so
       // widening costs more than the 1-task scan it parallelizes
       val docs = s.read.parquet(s"$dir/documents.parquet")

@@ -72,9 +72,8 @@ object MetaBlocking {
    * per-record (sum, count) aggregate; nothing here is quadratic.
    *
    * `weighted` feeds TWO consumers (the node-stat aggregate + the join
-   * side); with `materializeWeights` (default) it snapshots once
-   * (graft.io.Snapshot, AT CALL TIME) — otherwise the full pair-stream
-   * aggregate re-executes per consumer.
+   * side), so it is snapshotted once (graft.io.Snapshot, AT CALL TIME)
+   * instead of re-executing the full pair-stream aggregate per consumer.
    *
    * Node stats are ONE ROW PER RECORD (~24 B each): both endpoint joins
    * against the pair stream want the stats side broadcast, never the
@@ -89,19 +88,12 @@ object MetaBlocking {
    * broadcast); the joins then shuffle co-partitioned on the endpoint.
    */
   def wnpPrune(weighted: DataFrame,
-      materializeWeights: Boolean = true,
       broadcastNodes: Boolean = true): DataFrame = {
-    val wdf =
-      if (materializeWeights)
-        graft.io.Snapshot(weighted, "metablock_weights", widen = true)
-      else weighted
-    val nodesAgg = wdf
+    val wdf = graft.io.Snapshot(weighted, "metablock_weights", widen = true)
+    val nodes = graft.io.Snapshot(wdf
       .select(explode(array(col("id1"), col("id2"))).as("id"), col("w"))
-      .groupBy("id").agg(sum(col("w")).as("s"), count(lit(1)).as("n"))
-    val nodes =
-      if (materializeWeights)
-        graft.io.Snapshot(nodesAgg, "metablock_nodes")
-      else nodesAgg
+      .groupBy("id").agg(sum(col("w")).as("s"), count(lit(1)).as("n")),
+      "metablock_nodes")
     def side(k: String) = {
       val renamed = nodes.withColumnsRenamed(
         Map("id" -> k, "s" -> s"s${k.last}", "n" -> s"n${k.last}"))
@@ -117,8 +109,7 @@ object MetaBlocking {
 
   /** The full published pipeline: filter → weight → prune. */
   def prune(blocks: DataFrame, ratio: Double = 0.8, maxBlockSize: Int = 200,
-      chunkTarget: Int = 256, materializeWeights: Boolean = true,
-      broadcastNodes: Boolean = true): DataFrame =
+      chunkTarget: Int = 256, broadcastNodes: Boolean = true): DataFrame =
     wnpPrune(weightedPairs(filterBlocks(blocks, ratio), maxBlockSize, chunkTarget),
-      materializeWeights, broadcastNodes)
+      broadcastNodes)
 }

@@ -47,9 +47,6 @@ object ConnectedComponents {
       .distinct()
   }
 
-  private def checkpointed(df: DataFrame, spark: SparkSession): DataFrame =
-    Checkpoints.checkpointed(df, spark)
-
   /**
    * @param edges DataFrame with two long/numeric columns (id1, id2)
    * @return labels (id, component) for every node APPEARING IN AN EDGE;
@@ -58,7 +55,7 @@ object ConnectedComponents {
    */
   def run(edges: DataFrame, maxIter: Int = 50): CCResult = {
     val spark = edges.sparkSession
-    val e = checkpointed(normalize(edges), spark)
+    val e = Checkpoints.checkpointed(normalize(edges), spark)
     val (fixpoint, iter) = loopToFixpoint(e, signature(e), spark, maxIter)
     CCResult(labelsFromFixpoint(fixpoint), iter)
   }
@@ -82,7 +79,7 @@ object ConnectedComponents {
     var iter = 0
     var prevSig = sig0
     while (!converged && iter < maxIter) {
-      val next = checkpointed(smallStar(largeStar(e)), spark)
+      val next = Checkpoints.checkpointed(smallStar(largeStar(e)), spark)
       val sig = signature(next)
       converged = sig == prevSig
       prevSig = sig
@@ -124,7 +121,7 @@ object ConnectedComponents {
    */
   def labels(edges: DataFrame, maxIter: Int = 50): DataFrame = {
     val spark = edges.sparkSession
-    labelsOfNormalized(checkpointed(normalize(edges), spark), maxIter)
+    labelsOfNormalized(Checkpoints.checkpointed(normalize(edges), spark), maxIter)
   }
 
   /** [[labels]] over an ALREADY canonical+distinct simple edge frame
@@ -138,7 +135,7 @@ object ConnectedComponents {
     val spark = simple.sparkSession
     val e = simple.toDF("u", "v")
     labelsOfNormalized(
-      if (alreadyMaterialized) e else checkpointed(e, spark), maxIter)
+      if (alreadyMaterialized) e else Checkpoints.checkpointed(e, spark), maxIter)
   }
 
   private def labelsOfNormalized(e0: DataFrame, maxIter: Int): DataFrame = {

@@ -41,13 +41,6 @@ object Dedupe {
       canonFields: Seq[String] = Seq("url", "text_norm", "lang"),
       // metrics cost extra actions (counts); off for latency-sensitive runs
       collectMetrics: Boolean = true,
-      // materialize the prepared frame once (the reference's processed_{sid}
-      // Postgres table†): blocking, field-attach, exact-group maps, entity
-      // map and canon are INDEPENDENT actions — without the snapshot each
-      // re-executes the scan → normalize chain and the exact-group shuffle
-      // repeats. One write of ~input size buys 3-4 full re-scans back; turn
-      // off only when the input is already a cheap materialized view.
-      materializePrepared: Boolean = true,
       // G2 tail: components above this size are re-thresholded (None = off)
       capComponentSize: Option[Int] = None,
       // G3: optional per-component HAC refinement (reference's hierarchical
@@ -212,7 +205,6 @@ object Dedupe {
 
   private def runInternal(spark: SparkSession, pages: DataFrame, config: Config,
       resumeScored: Option[DataFrame]): Result = {
-    val model = config.model
     // the checkpoint dir is SparkContext-global state: restore it after
     // the run (every CC iteration inside run() is eager, so nothing reads
     // the dir lazily afterwards) — without this, one checkpointed run
@@ -267,10 +259,13 @@ object Dedupe {
     val htmlNeeded = config.canonFields.contains("html") ||
       predFields(model.predicates).contains("html") ||
       requiredFields(model.featureNames).contains("html")
-    val prepared =
-      if (!config.materializePrepared) withRep
-      else Snapshot(if (htmlNeeded) withRep else withRep.drop("html"), "prepared",
-        scratch, widen = true)
+    // materialize the prepared frame once (the reference's processed_{sid}
+    // Postgres table†): blocking, field-attach, exact-group maps, entity
+    // map and canon are INDEPENDENT actions — without the snapshot each
+    // re-executes the scan → normalize chain and the exact-group shuffle
+    // repeats. One write of ~input size buys 3-4 full re-scans back.
+    val prepared = Snapshot(if (htmlNeeded) withRep else withRep.drop("html"),
+      "prepared", scratch, widen = true)
 
     val idToRep = prepared.select(col("id"), col("rep"))
     val reps0 = prepared.filter(col("id") === col("rep"))
@@ -278,9 +273,9 @@ object Dedupe {
     // with TF-IDF on two fields previously failed analysis — only the
     // first field's <f>_tfidf column was built). Corpus stats are computed
     // over the deduped representatives — the frame that is scored — and
-    // the vectors are snapshotted when materialization is on, because
-    // withTfidfVectors shuffles (document-frequency agg) and reps feeds
-    // three independent consumers (blocking, attach, labels).
+    // the vectors are snapshotted, because withTfidfVectors shuffles
+    // (document-frequency agg) and reps feeds three independent consumers
+    // (blocking, attach, labels).
     val tfidfFields = model.featureNames
       .filter(_.startsWith("cosine_tfidf_"))
       .map(_.stripPrefix("cosine_tfidf_")).distinct
@@ -288,7 +283,7 @@ object Dedupe {
       Scoring.withTfidfVectors(df, f, "id", topK = config.tfidfTopK)
     }
     val reps =
-      if (tfidfFields.isEmpty || !config.materializePrepared) repsTf
+      if (tfidfFields.isEmpty) repsTf
       else Snapshot(repsTf, "reps_tfidf", scratch, widen = true)
 
     // ---- stages 2+3 (skipped entirely on resume): blocking (narrow) +
@@ -366,12 +361,8 @@ object Dedupe {
     // narrow (id, component) snapshot: confidences, the entity map, canon
     // and the entity count are independent actions — each would re-run the
     // expand join (and the CC label union+distinct behind it) otherwise
-    val allLabels0 = idToRep.join(repLabels, "rep")
-      .select(col("id"), col("component"))
-    val allLabels =
-      if (config.materializePrepared)
-        Snapshot(allLabels0, "labels", scratch, widen = true)
-      else allLabels0
+    val allLabels = Snapshot(idToRep.join(repLabels, "rep")
+      .select(col("id"), col("component")), "labels", scratch, widen = true)
     // S5: lineage of the clustering output too (CC iterations checkpoint
     // under $dir/cc; this records what the final labels looked like)
     config.checkpointDir.foreach(dir => writeLineage(dir, "labels", allLabels))

@@ -102,13 +102,8 @@ object Gazetteer {
     val m = messy.select(col("id").as("id1") +: fields.map(f => col(f).as(s"${f}_1")): _*)
     val attached = pairs.join(m, "id1")
       .join(if (config.broadcastCanon) broadcast(index.fields) else index.fields, "id2")
-    // project to (id1, id2, score) BEFORE the rank window: scorePairs
-    // carries the attached fields through, so the window's shuffle used
-    // to move both sides' multi-KB text per candidate pair — the rank
-    // only needs 24 bytes/row (round-6; guide §2.3 shuffle-fewer-bytes)
     val scored = Scoring.scorePairs(attached, model)
       .filter(col("score") >= model.threshold)
-      .select(col("id1"), col("id2"), col("score"))
 
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("id1")).orderBy(col("score").desc, col("id2"))

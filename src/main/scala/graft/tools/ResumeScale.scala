@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.fixtures.PagesGen
 import graft.pipeline.Dedupe
@@ -32,18 +31,8 @@ object ResumeScale {
     val phase = args(0)
     val ckptDir = args(1)
     val replicas = if (args.length > 2) args(2).toInt else 100
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]").appName(s"graft-resume-$phase")
-      .config("spark.sql.shuffle.partitions", (cpus * 4).toString)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionNum",
-        (cpus * 2).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val pages = PagesGen.scaled(spark, sfDir, replicas)
+    val spark = Prof.session(s"graft-resume-$phase")
+    val pages = PagesGen.scaled(spark, Prof.sfDir, replicas)
     val config = Dedupe.Config(graft.SparkEntry.demoModel,
       checkpointDir = Some(ckptDir), collectMetrics = false)
 

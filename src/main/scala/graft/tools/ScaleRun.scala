@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 import graft.fixtures.PagesGen
 import graft.pipeline.Dedupe
 
@@ -11,23 +9,14 @@ import graft.pipeline.Dedupe
   * points are quoted in BASELINE.md). */
 object ScaleRun {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val replicaPoints =
       if (args.nonEmpty) args.toSeq.map(_.toInt) else Seq(10, 40)
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]").appName("graft-scale-run")
-      .config("spark.sql.shuffle.partitions", (cpus * 4).toString)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionNum", (cpus * 2).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
     // SPARK_GRAFT_CODEC=zstd swaps the shuffle/scratch compression codec
     // (default lz4) — the knob for testing whether a throughput dip is
     // single-disk shuffle I/O (zstd ~2x smaller spill at some CPU cost)
-    sys.env.get("SPARK_GRAFT_CODEC").foreach(c =>
-      builder.config("spark.io.compression.codec", c))
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Prof.session("graft-scale-run", b =>
+      sys.env.get("SPARK_GRAFT_CODEC").fold(b)(c =>
+        b.config("spark.io.compression.codec", c)))
     // SPARK_GRAFT_SCALE_MODEL=combo swaps the flagship model's plain
     // 4×16-bit simhash banding for block-combination banding (b=6, k=3,
     // 20 keys of >=31 bits): the demoModel curve carries an O(n²/2^16)
@@ -41,7 +30,7 @@ object ScaleRun {
           graft.model.PredicateSpec("simhash_combo", "text", n = 3, bands = 6)))
       else graft.SparkEntry.demoModel
     replicaPoints.foreach { r =>
-      val pages = PagesGen.scaled(spark, sfDir, r)
+      val pages = PagesGen.scaled(spark, Prof.sfDir, r)
       val t0 = System.nanoTime()
       val res = Dedupe.run(spark, pages, Dedupe.Config(
         model, collectMetrics = true))

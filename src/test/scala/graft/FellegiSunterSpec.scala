@@ -126,7 +126,8 @@ class FellegiSunterSpec extends SparkSpec {
     "weights (no labels) score the flagship candidate set at F1=1.0 on " +
     "the 500-base golden fixture") {
     // labels are used ONLY for judging — fit sees gammas alone.
-    // (tools.FsProbe measured 1.0 / 1.0 / 0.999954 at 500/2000/10000.)
+    // (the since-removed tools.FsProbe main, kept in git history,
+    // measured 1.0 / 1.0 / 0.999954 at 500/2000/10000.)
     import graft.gfunctions._
     import graft.model.PredicateSpec
     import graft.pipeline.{Dedupe, Eval}

@@ -116,7 +116,7 @@ class PipelineOpsSpec extends SparkSpec {
     val r = Dedupe.run(spark, pages,
       Dedupe.Config(SparkEntry.demoModel, collectMetrics = false))
     assert(r.scratchDir.isDefined,
-      "a materializePrepared run must report its scratch dir")
+      "a run that snapshots its prepared frame must report its scratch dir")
     val p = new org.apache.hadoop.fs.Path(r.scratchDir.get)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(fs.exists(p), "scratch dir should exist while outputs are live")
