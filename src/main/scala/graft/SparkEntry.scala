@@ -66,17 +66,15 @@ object SparkEntry {
     * Bench's tuned sub-session scanned it on 3-4 threads (measured:
     * q_bridge_edges spent ~13 s per near-serial scan). Byte-based split
     * sizing simply misjudges these row-dense files; 4m splits restore
-    * full scan parallelism for every consumer. Parameterised via
-    * spark.graft.snapshotSplitBytes; results are unaffected (no memo
-    * consumer observes partition layout — q_training_sample's sampling is
-    * partition-free by construction). */
+    * full scan parallelism for every consumer. Results are unaffected
+    * (no memo consumer observes partition layout — q_training_sample's
+    * sampling is partition-free by construction). */
   private val readerSessions =
     new java.util.concurrent.ConcurrentHashMap[org.apache.spark.SparkContext, SparkSession]()
   private def snapshotReader(s: SparkSession): SparkSession =
     readerSessions.computeIfAbsent(s.sparkContext, { _ =>
       val r = s.newSession()
-      r.conf.set("spark.sql.files.maxPartitionBytes",
-        s.conf.getOption("spark.graft.snapshotSplitBytes").getOrElse("4m"))
+      r.conf.set("spark.sql.files.maxPartitionBytes", "4m")
       s.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
         override def onApplicationEnd(
             e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
@@ -1263,8 +1261,7 @@ object SparkEntry {
     // The maxTrainDocFreq boilerplate guard is semantically inert at
     // df>50 on this corpus (unit-tested with a literal fixture instead)
     // but runs for real, so the census+anti-join plumbing is oracle-
-    // covered; the hashGrams shuffle-width variant is unit-asserted
-    // equal to the string-gram plan.
+    // covered.
     "q_decontaminate" -> ((s, dir) => {
       val docs = s.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id"), col("text"))

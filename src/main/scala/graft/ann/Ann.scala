@@ -237,25 +237,22 @@ object Ann {
    *                  the skipped count run [[semDedupClusterMetrics]]
    *                  (same assignment, PairGen's metrics aggregate).
    *                  Bounds the worst cluster's cost.
-   * @param persist   cache the assignment frame (default): it feeds pair
-   *                  generation, edge scoring and the final output — 3-4
-   *                  corpus×k recomputes without it. Call `unpersist()`
-   *                  (or let eviction handle it) once the result is
-   *                  consumed; one-shot callers can pass false.
    * @return one row per item: (item_id, cent_id, cos_c = cosine to its
    *         centroid rounded to 5, group_id = min item id of its duplicate
    *         group, keep)
    */
   def semDedup(items: DataFrame, centroids: DataFrame, tau: Double,
-      maxClusterSize: Int = 1 << 20, persist: Boolean = true): DataFrame = {
+      maxClusterSize: Int = 1 << 20): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val i = items.select(col(items.columns(0)).as("item_id"), col(items.columns(1)).as("ivec"))
     val c = centroids.select(col(centroids.columns(0)).as("cent_id"),
       col(centroids.columns(1)).cast("array<double>").as("cvec"))
     require(!c.isEmpty, "semDedup: centroids must be non-empty — an empty " +
       "set would assign nothing and silently drop every item")
-    val assigned0 = assignNearest(i, c)
-    val assigned = if (persist) assigned0.persist() else assigned0
+    // the assignment feeds pair generation, edge scoring and the final
+    // output — 3-4 corpus×k recomputes without the snapshot; reclaim it
+    // with Dedupe.reclaimLibraryScratch once the result is consumed
+    val assigned = graft.io.Snapshot(assignNearest(i, c), "semdedup_assigned")
     val blocks = assigned.select(
       col("cent_id").cast("string").as("block_key"), col("item_id").as("id"))
     val pairs = graft.pairs.PairGen.candidatePairs(blocks,

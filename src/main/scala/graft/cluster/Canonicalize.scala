@@ -27,26 +27,10 @@ object Canonicalize {
     // distance is symmetric so both tie and the tie-break picks the
     // lexicographic minimum — vs.head either way, no comparator call.
     if (vs.length <= 2) return vs.head
-    // comparator inputs capped at a prefix: crawl-page fields are multi-KB
-    // and JW over full bodies made canonicalization the pipeline's top cost
-    // at scale; the first maxCompareLen chars carry the discriminating
-    // signal (values identical through the prefix tie → lexicographic min,
-    // still deterministic). The RETURNED value is always the full string.
-    val cs = vs.map(v => if (v.length > maxCompareLen) v.substring(0, maxCompareLen) else v)
-    var bestIdx = 0
-    var bestCost = Double.MaxValue
-    var i = 0
-    while (i < cs.length) {
-      var cost = 0.0
-      var j = 0
-      while (j < cs.length) {
-        if (i != j) cost += 1.0 - Sim.jaroWinkler(cs(i), cs(j))
-        j += 1
-      }
-      if (cost < bestCost) { bestCost = cost; bestIdx = i } // first == lexic. min on tie
-      i += 1
-    }
-    vs(bestIdx)
+    // the capped multiset as sorted (value, count) pairs: the same kernel
+    // canonTable runs, so both compute one medoid by construction
+    medoidWeighted(vs.groupMapReduce(identity)(_ => 1L)(_ + _).toSeq.sortBy(_._1),
+      maxCompareLen)
   }
 
   /** Weighted medoid over (value, multiplicity) pairs, values pre-sorted
@@ -58,6 +42,11 @@ object Canonicalize {
       maxCompareLen: Int = 256): String = {
     if (vals.isEmpty) return null
     if (vals.length == 1) return vals.head._1
+    // comparator inputs capped at a prefix: crawl-page fields are multi-KB
+    // and JW over full bodies made canonicalization the pipeline's top cost
+    // at scale; the first maxCompareLen chars carry the discriminating
+    // signal (values identical through the prefix tie → lexicographic min,
+    // still deterministic). The RETURNED value is always the full string.
     val cs = vals.map { case (v, _) =>
       if (v.length > maxCompareLen) v.substring(0, maxCompareLen) else v
     }

@@ -97,13 +97,11 @@ object ConnectedComponents {
 
   /** Size-adaptive edge cap below which [[labels]] computes the whole
     * labeling in ONE single-task union-find pass instead of iterating
-    * (~40 B/edge of task memory, so the default bounds the task at
-    * ~80 MB). Parameterised, not core-count-derived: the same default
-    * is right on local[8] and on a 1000-executor cluster, because it
-    * bounds per-TASK memory, not parallelism. */
-  private[cluster] def oneTaskEdgeCap(spark: SparkSession): Long =
-    spark.conf.getOption("spark.graft.cc.oneTaskEdgeCap")
-      .map(_.toLong).getOrElse(2000000L)
+    * (~40 B/edge of task memory, so the cap bounds the task at
+    * ~80 MB). Not core-count-derived: the same cap is right on local[8]
+    * and on a 1000-executor cluster, because it bounds per-TASK memory,
+    * not parallelism. */
+  private val oneTaskEdgeCap = 2000000L
 
   /**
    * Labels-only transitive closure — identical output contract to
@@ -145,7 +143,7 @@ object ConnectedComponents {
     val e = e0.select(col("u").cast("long").as("u"), col("v").cast("long").as("v"))
     val spark = e.sparkSession
     val sig = signature(e)
-    if (sig._1 <= oneTaskEdgeCap(spark)) singleTaskLabels(e, sig._1)
+    if (sig._1 <= oneTaskEdgeCap) singleTaskLabels(e, sig._1)
     else labelsFromFixpoint(loopToFixpoint(e, sig, spark, maxIter)._1)
   }
 

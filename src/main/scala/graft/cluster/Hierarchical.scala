@@ -11,8 +11,9 @@ import org.apache.spark.sql.types._
  * cophenetic threshold, splitting components that transitive closure
  * over-merged (A~B, B~C strong but A~C weak).
  *
- * The north rule makes plain CC the default (BASELINE.json:14); this is
- * the flagged-off refinement. Components are small after thresholding, so
+ * The north rule makes plain CC the pipeline's clustering
+ * (BASELINE.json:14); this refinement is a separate operator a caller
+ * applies to a run's labels. Components are small after thresholding, so
  * each group's HAC runs single-node inside `flatMapGroups` (average
  * linkage over distance = 1 - score; unobserved pairs = distance 1.0);
  * components above `maxComponentSize` pass through unrefined (logged by

@@ -37,15 +37,9 @@ object Dedupe {
       model: Model,
       maxBlockSize: Int = 200,
       checkpointDir: Option[String] = None,
-      tfidfTopK: Int = 64,
       canonFields: Seq[String] = Seq("url", "text_norm", "lang"),
       // metrics cost extra actions (counts); off for latency-sensitive runs
-      collectMetrics: Boolean = true,
-      // G2 tail: components above this size are re-thresholded (None = off)
-      capComponentSize: Option[Int] = None,
-      // G3: optional per-component HAC refinement (reference's hierarchical
-      // sub-clustering; off by default per the north rule)
-      hierarchicalCut: Option[Double] = None)
+      collectMetrics: Boolean = true)
 
   case class Result(
       entityMap: DataFrame, // (id, url, component, confidence)
@@ -280,7 +274,7 @@ object Dedupe {
       .filter(_.startsWith("cosine_tfidf_"))
       .map(_.stripPrefix("cosine_tfidf_")).distinct
     val repsTf = tfidfFields.foldLeft(reps0) { (df, f) =>
-      Scoring.withTfidfVectors(df, f, "id", topK = config.tfidfTopK)
+      Scoring.withTfidfVectors(df, f, "id")
     }
     val reps =
       if (tfidfFields.isEmpty) repsTf
@@ -341,21 +335,10 @@ object Dedupe {
     val cc =
       if (config.collectMetrics) ConnectedComponents.run(edges)
       else ConnectedComponents.CCResult(ConnectedComponents.labels(edges), -1)
-    val repLabels0 = reps.select(col("id"))
+    val repLabels = reps.select(col("id"))
       .join(cc.labels, Seq("id"), "left")
-      .select(col("id"), coalesce(col("component"), col("id")).as("component"))
-    val repLabels1 = config.capComponentSize match {
-      case Some(cap) => ConnectedComponents.capGiantComponents(
-        repLabels0, scored.select(col("id1"), col("id2"), col("score")),
-        cap, model.threshold)
-      case None => repLabels0
-    }
-    val repLabels2 = config.hierarchicalCut match {
-      case Some(cut) => graft.cluster.Hierarchical.refine(
-        repLabels1, scored.select(col("id1"), col("id2"), col("score")), cut)
-      case None => repLabels1
-    }
-    val repLabels = repLabels2.select(col("id").as("rep"), col("component"))
+      .select(col("id").as("rep"),
+        coalesce(col("component"), col("id")).as("component"))
 
     // ---- stage 5: expand exact groups, confidence, canon
     // narrow (id, component) snapshot: confidences, the entity map, canon

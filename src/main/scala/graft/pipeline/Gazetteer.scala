@@ -71,8 +71,7 @@ object Gazetteer {
    * across many increments — run a periodic compaction (rebuild the index
    * from the accumulated canon table) to restore the exact bound.
    */
-  def extendIndex(index: CanonIndex, newCanon: DataFrame,
-      persist: Boolean = true): CanonIndex = {
+  def extendIndex(index: CanonIndex, newCanon: DataFrame): CanonIndex = {
     // id-dedupe against the existing index: a re-crawled url whose text
     // changed re-arrives with the SAME id (xxhash64(url)) but different
     // blocks/fields — adding it again would give one canon_id two
@@ -80,7 +79,7 @@ object Gazetteer {
     // crowding). First write wins; a compaction rebuild refreshes fields.
     val fresh = newCanon.join(
       index.fields.select(col("id2").as("id")), Seq("id"), "left_anti")
-    val inc = buildCanonIndex(fresh, index.config, persist)
+    val inc = buildCanonIndex(fresh, index.config)
     CanonIndex(index.blocks.union(inc.blocks),
       index.fields.union(inc.fields), index.config)
   }

@@ -167,13 +167,10 @@ object Dsir {
   /** Keep the k most target-like documents under a strict total order
     * — (metric desc, id asc), so the selected SET is deterministic.
     * orderBy+limit plans as TakeOrdered (per-partition top-k + driver
-    * merge of k-row heaps), never a global sort. `byPerGram` ranks by
-    * the length-normalized average instead of the raw sum (the raw
+    * merge of k-row heaps), never a global sort. The metric is the
+    * length-normalized `lw_per_gram`, not the raw sum (the raw
     * log-weight of a long document dominates regardless of fit). */
-  def selectTopK(scored: DataFrame, idCol: String, k: Int,
-                 byPerGram: Boolean = true): DataFrame = {
-    val m = if (byPerGram) col("lw_per_gram") else col("lw_micros")
-    scored.filter(m.isNotNull)
-      .orderBy(m.desc, col(idCol).asc).limit(k)
-  }
+  def selectTopK(scored: DataFrame, idCol: String, k: Int): DataFrame =
+    scored.filter(col("lw_per_gram").isNotNull)
+      .orderBy(col("lw_per_gram").desc, col(idCol).asc).limit(k)
 }

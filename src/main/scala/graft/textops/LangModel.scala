@@ -41,10 +41,9 @@ import graft.gfunctions._
  * key — two shuffles bounded by the doc-gram volume, no window, no
  * driver collect; AQE skew-split covers the zipf head. `minCount`
  * pruning (KenLM's singleton pruning†) shrinks the LM table without
- * touching context totals, so smoothing stays coherent; `hashKeys`
- * swaps the string join keys for xxhash64 (8-byte shuffle rows, the
- * `ngramOverlap(hashGrams)` pattern) on the non-oracle path — a
- * collision merely merges two gram counts at p ≈ 2^-64 per pair.
+ * touching context totals, so smoothing stays coherent. The join keys
+ * are the gram and context strings, which the DuckDB twin compares
+ * directly.
  */
 object LangModel {
 
@@ -54,7 +53,7 @@ object LangModel {
     * denominator or P(·|ctx) would stop normalizing); `vocab` = 1-row
     * (vocab: long) carrying V = distinct reference unigrams + 1. */
   final case class NgramLm(grams: DataFrame, contexts: DataFrame,
-      vocab: DataFrame, n: Int, hashKeys: Boolean)
+      vocab: DataFrame, n: Int)
 
   private def docTokens(textCol: Column): Column = tokens(lower(textCol))
 
@@ -70,7 +69,7 @@ object LangModel {
     * outputs are plain DataFrames — persist them to parquet to reuse one
     * fit across scoring runs (the KenLM-artifact lifecycle). */
   def fit(ref: DataFrame, textCol: String, n: Int = 3,
-          minCount: Long = 1L, hashKeys: Boolean = false): NgramLm = {
+          minCount: Long = 1L): NgramLm = {
     require(n >= 2, s"n-gram LM needs n >= 2, got $n")
     // materialize the census once: grams AND contexts derive from it, and
     // without the cut each downstream join would re-run the reference
@@ -85,9 +84,7 @@ object LangModel {
     val vocab = ref
       .select(explode(docTokens(col(textCol))).as("w"))
       .agg((count_distinct(col("w")) + lit(1L)).as("vocab"))
-    def h(df: DataFrame, k: String) =
-      if (hashKeys) df.withColumn(k, xxhash64(col(k))) else df
-    NgramLm(h(grams, "gram"), h(contexts, "ctx"), vocab, n, hashKeys)
+    NgramLm(grams, contexts, vocab, n)
   }
 
   /**
@@ -102,14 +99,10 @@ object LangModel {
   def crossEntropy(docs: DataFrame, idCol: String, textCol: String,
                    lm: NgramLm, alpha: Double = 0.1): DataFrame = {
     require(alpha > 0.0, "Lidstone smoothing needs alpha > 0")
-    val gramKey =
-      if (lm.hashKeys) xxhash64(col("gram_str")) else col("gram_str")
-    val ctxKey =
-      if (lm.hashKeys) xxhash64(ctxOf(col("gram_str"))) else ctxOf(col("gram_str"))
     val docGrams = docs
       .select(col(idCol).as("__id"),
-        explode(token_shingles(docTokens(col(textCol)), lm.n)).as("gram_str"))
-      .select(col("__id"), gramKey.as("gram"), ctxKey.as("ctx"))
+        explode(token_shingles(docTokens(col(textCol)), lm.n)).as("gram"))
+      .select(col("__id"), col("gram"), ctxOf(col("gram")).as("ctx"))
       .groupBy("__id", "gram", "ctx").agg(count(lit(1)).as("tf"))
     val p = (coalesce(col("cnt"), lit(0L)) + lit(alpha)) /
       (coalesce(col("ctx_cnt"), lit(0L)) + lit(alpha) * col("vocab"))

@@ -582,25 +582,20 @@ object TextOps {
    * verify with exact shingle-set Jaccard ≥ threshold.
    * The LSH recall/precision knobs are (k, bands); verification makes the
    * output exact w.r.t. Jaccard, so LSH only affects recall.
+   * The signature frame is snapshotted AT CALL TIME: it feeds the block
+   * census, both legs of the grid self-join and the verify attach —
+   * without it the CPU-heavy signature computation re-executes per
+   * consumer (~4×).
    */
   def minhashDupePairs(df: DataFrame, idCol: String, textCol: String,
       k: Int = 64, bands: Int = 16, jaccardThreshold: Double = 0.7,
-      maxBucketSize: Int = 200,
-      // materialize the signature frame eagerly (a scratch snapshot AT
-      // CALL TIME): it feeds the block census, both legs of the grid
-      // self-join and the verify attach — without it the CPU-heavy
-      // signature computation re-executes per consumer (~4×). false keeps
-      // the lazy recompute plan.
-      materializeSignatures: Boolean = true): DataFrame = {
+      maxBucketSize: Int = 200): DataFrame = {
     require(k % bands == 0, "k must divide into bands")
     val sigs = df.select(
         col(idCol).as("id"),
         token_shingles(tokens(lower(col(textCol))), 3).as("shingles"))
       .withColumn("sig", minhash(col("shingles"), k))
-    val shingled =
-      if (materializeSignatures)
-        graft.io.Snapshot(sigs, "minhash_sigs", widen = true)
-      else sigs
+    val shingled = graft.io.Snapshot(sigs, "minhash_sigs", widen = true)
     // band keys via THE shared definition (minhashBandKeys), so the
     // incremental index and the batch operator cannot desynchronize
     val blocks = minhashBandKeys(shingled, k, bands)
@@ -784,23 +779,17 @@ object TextOps {
    * maxTrainDocFreq train documents are boilerplate (licence lines,
    * navigation chrome); they carry no contamination evidence and are
    * exactly the keys whose join fan-out is quadratic. What remains
-   * equi-joins on the gram and hash-aggregates per pair. With
-   * hashGrams=true the join/aggregate keys are 8-byte xxhash64 values
-   * instead of the gram strings (13-token grams average ~80 bytes of
-   * shuffle per row otherwise); a collision can only add a spurious hit
-   * at p ≈ 2^-64 per gram pair, so the flag set is unchanged in
-   * practice. Kept off in the oracle-checked contract query, which needs
-   * string grams for DuckDB parity.
+   * equi-joins on the gram and hash-aggregates per pair. The keys are
+   * the gram strings, which the DuckDB twin of the contract query
+   * compares directly.
    */
   def ngramOverlap(train: DataFrame, evalDf: DataFrame, idCol: String,
       textCol: String, n: Int = 13, minHits: Long = 1L,
-      maxTrainDocFreq: Long = 1000L, hashGrams: Boolean = false): DataFrame = {
-    def grams(df: DataFrame, as: String) = {
-      val g = df.select(col(idCol).as(as),
+      maxTrainDocFreq: Long = 1000L): DataFrame = {
+    def grams(df: DataFrame, as: String) =
+      df.select(col(idCol).as(as),
           explode(token_shingles(tokens(lower(col(textCol))), n)).as("gram"))
         .distinct()
-      if (hashGrams) g.select(col(as), xxhash64(col("gram")).as("gram")) else g
-    }
     val tg = grams(train, "train_id")
     // self-contained doc-frequency census over the train side; the hot
     // set is the zipf head (small by construction), so the anti join
@@ -882,14 +871,11 @@ object TextOps {
    * occurrences explode k positions each (bounded by k * duplicated-
    * token volume, not corpus volume); the splice is one posexplode +
    * per-document windows + one groupBy(id), all bounded by document
-   * size. With `hashGrams` the census/join key is xxhash64(gram) — a
-   * fixed 8-byte shuffle key instead of a ~k-word string (the 100 TB
-   * path; semantics identical up to 2^-64 collisions). The contract
-   * query keys on the raw gram so the DuckDB twin is hash-free; a unit
-   * test pins hashGrams parity.
+   * size. The census/join key is the raw gram, so the DuckDB twin of
+   * the contract query is hash-free.
    */
   def spanDedupe(df: DataFrame, idCol: String, textCol: String,
-      k: Int = 20, minDocs: Int = 2, hashGrams: Boolean = false): DataFrame = {
+      k: Int = 20, minDocs: Int = 2): DataFrame = {
     require(k > 0 && minDocs >= 2, s"need k > 0, minDocs >= 2: $k, $minDocs")
     import org.apache.spark.sql.expressions.Window
     val isTok = (r: Column) => r.rlike("^[\\p{L}\\p{N}]")
@@ -902,10 +888,7 @@ object TextOps {
     val gramArr = when(size(col("ts")) < k, array().cast("array<string>"))
       .otherwise(transform(sequence(lit(0), size(col("ts")) - k),
         i => array_join(slice(col("ts"), i + 1, lit(k)), " ")))
-    val grams0 = base.select(col("id"), posexplode(gramArr).as(Seq("i", "gram")))
-    val grams = if (hashGrams)
-      grams0.select(col("id"), col("i"), xxhash64(col("gram")).as("gram"))
-    else grams0
+    val grams = base.select(col("id"), posexplode(gramArr).as(Seq("i", "gram")))
     val census = grams.groupBy("gram")
       .agg(count_distinct(col("id")).as("nd"), min(col("id")).as("keeper"))
       .filter(col("nd") >= minDocs)
@@ -1109,13 +1092,12 @@ object TextOps {
    * SimHash near-dup pairs: banded 64-bit simhash keys → candidate pairs →
    * hamming-distance verification ≤ maxHamming. Two docs within hamming d
    * of each other collide on ≥1 of `bands` bands when d < bands (pigeonhole)
-   * — recall is structural, not probabilistic, for d < bands.
+   * — recall is structural, not probabilistic, for d < bands. The
+   * signatures are snapshotted at call time, as in [[minhashDupePairs]] —
+   * simhash over full text is the dominant per-row cost here.
    */
   def simhashDupePairs(df: DataFrame, idCol: String, textCol: String,
       bands: Int = 4, maxHamming: Int = 3, maxBucketSize: Int = 1000,
-      // same eager-materialization contract as minhashDupePairs —
-      // simhash over full text is the dominant per-row cost here
-      materializeSignatures: Boolean = true,
       // combo banding (Manku WWW '07†, see Blocking.simhashComboKeys):
       // key on every (comboBlocks - maxHamming)-subset of comboBlocks hash
       // blocks instead of plain bands — same structural recall for
@@ -1131,11 +1113,8 @@ object TextOps {
       comboBlocks: Int = 0): DataFrame = {
     val sigs = df.select(col(idCol).as("id"),
       simhash64(tokens(lower(col(textCol)))).as("sh"))
-    val withHash =
-      if (materializeSignatures)
-        graft.io.Snapshot(sigs, "simhash_sigs", widen = true)
-      else sigs
-    hammingNearDupPairs(withHash, bands, maxHamming, maxBucketSize, comboBlocks)
+    hammingNearDupPairs(graft.io.Snapshot(sigs, "simhash_sigs", widen = true),
+      bands, maxHamming, maxBucketSize, comboBlocks)
   }
 
   /**

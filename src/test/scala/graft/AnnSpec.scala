@@ -136,4 +136,13 @@ class AnnSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("centroids must be non-empty"))
   }
+
+  test("semDedup leaves no cache entry once the library scratch is reclaimed") {
+    val before = org.apache.spark.sql.CacheProbe.cachedEntries(spark)
+    val cents = Seq((0L, vec(1, 0, 0, 0)), (100L, vec(0, 1, 0, 0)))
+      .toDF("cent_id", "cvec")
+    assert(Ann.semDedup(items, cents, tau = 0.9).count() == 5)
+    graft.pipeline.Dedupe.reclaimLibraryScratch(spark)
+    assert(org.apache.spark.sql.CacheProbe.cachedEntries(spark) <= before)
+  }
 }

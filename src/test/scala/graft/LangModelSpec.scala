@@ -63,17 +63,6 @@ class LangModelSpec extends SparkSpec {
     assert(out == micros(Seq((0.1, 3.4), (0.1, 1.4), (2.1, 3.4))))
   }
 
-  test("hashKeys path is value-identical to the string-keyed path") {
-    val docs = Seq((1L, "a b c"), (2L, "a b a b c z"), (3L, "q w e r"))
-      .toDF("id", "text")
-    val s = LangModel.crossEntropy(docs, "id", "text",
-      LangModel.fit(ref, "text", n = 3), 0.1).orderBy("id").collect()
-    val h = LangModel.crossEntropy(docs, "id", "text",
-      LangModel.fit(ref, "text", n = 3, hashKeys = true), 0.1)
-      .orderBy("id").collect()
-    assert(s.toSeq == h.toSeq)
-  }
-
   test("pplBucket cuts at the literal thresholds, NULL-safe") {
     val out = Seq(Some(1.0), Some(3.0), Some(5.9), Some(6.0), None)
       .toDF("ce")

@@ -85,6 +85,8 @@ class PipelineSpec extends SparkSpec {
     assert(graft.cluster.Canonicalize.medoid(Seq("abcd", "abcx", "zzzz")) == "abcd")
     assert(graft.cluster.Canonicalize.medoid(Seq(null, "x")) == "x")
     assert(graft.cluster.Canonicalize.medoid(Seq(null)) == null)
+    // repeated values weight the pull: two "b"s outvote one "a"
+    assert(graft.cluster.Canonicalize.medoid(Seq("b", "b", "a")) == "b")
   }
 
   test("voteTable: plurality winner, tie-breaks, all-null entity kept") {

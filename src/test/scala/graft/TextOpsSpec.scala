@@ -386,7 +386,7 @@ class TextOpsSpec extends SparkSpec {
     assert(one == Set((1L, 9L, 1L)))
   }
 
-  test("ngramOverlap: hashGrams variant flags the same pairs") {
+  test("ngramOverlap: spliced train fragments are flagged in a random corpus") {
     def doc(seed: Int, len: Int) = {
       val r = new scala.util.Random(seed)
       Seq.fill(len)(s"w${r.nextInt(400)}").mkString(" ")
@@ -401,12 +401,10 @@ class TextOpsSpec extends SparkSpec {
       } else base
       (100L + i, spliced)
     }.toDF("doc_id", "text")
-    def run(h: Boolean) = TextOps.ngramOverlap(train, evals, "doc_id", "text",
-        n = 5, minHits = 2L, maxTrainDocFreq = 20L, hashGrams = h)
+    val got = TextOps.ngramOverlap(train, evals, "doc_id", "text",
+        n = 5, minHits = 2L, maxTrainDocFreq = 20L)
       .as[(Long, Long, Long)].collect().toSet
-    val plain = run(false)
-    assert(plain.nonEmpty, "spliced fragments must produce flags")
-    assert(run(true) == plain)
+    assert(got.nonEmpty, "spliced fragments must produce flags")
   }
 
   test("curate-chain seams: fully-boilerplate docs pass the repetition " +
@@ -663,7 +661,7 @@ class TextOpsSpec extends SparkSpec {
     assert(corpus.unionByName(appended).filter(!probeM).count() == 0)
   }
 
-  test("spanDedupe: hashGrams scale path returns the identical result") {
+  test("spanDedupe: varied corpus loses its shared spans, keeper doc 0 intact") {
     import spark.implicits._
     // varied corpus: per-doc unique prefix, a corpus-wide license span,
     // a group-level span on doc_id % 3 == 0, unique tails
@@ -673,12 +671,9 @@ class TextOpsSpec extends SparkSpec {
       val g = if (i % 3 == 0) s" $grp" else ""
       (i.toLong, s"u$i $span$g tail${i % 7} t$i")
     }.toDF("doc_id", "text")
-    def run(h: Boolean) = TextOps.spanDedupe(docs, "doc_id", "text",
-        k = 8, hashGrams = h)
+    val got = TextOps.spanDedupe(docs, "doc_id", "text", k = 8)
       .as[(Long, String, Long)].collect().toSet
-    val plain = run(false)
-    assert(plain.exists(_._3 > 0), "spans must actually be removed")
-    assert(plain.exists(r => r._1 == 0L && r._3 == 0L), "doc 0 is the keeper")
-    assert(run(true) == plain)
+    assert(got.exists(_._3 > 0), "spans must actually be removed")
+    assert(got.exists(r => r._1 == 0L && r._3 == 0L), "doc 0 is the keeper")
   }
 }
