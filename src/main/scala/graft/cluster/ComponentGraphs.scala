@@ -59,6 +59,18 @@ private[cluster] object ComponentGraphs {
     (ub.result(), vb.result())
   }
 
+  /** Home-slot hash of a node id for a power-of-two linear-probe table:
+    * murmur3's fmix64 first, so ids that differ only in high bits (e.g.
+    * `i << 16`) spread instead of piling onto a few home slots and
+    * turning every probe into a scan of one long run. */
+  def spread(key: Long): Int = {
+    var h = key
+    h ^= h >>> 33; h *= 0xff51afd7ed558ccdL
+    h ^= h >>> 33; h *= 0xc4ceb9fe1a85ec53L
+    h ^= h >>> 33
+    h.toInt
+  }
+
   /** Open-addressing node interner sized for a component of `m` edges
     * (≤ 2m nodes, ≤ 50% load): long id → dense [0, n) index, with the
     * reverse mapping in [[nodeId]]. */
@@ -70,7 +82,7 @@ private[cluster] object ComponentGraphs {
     val nodeId = new Array[Long](2 * math.max(m, 1))
     var n = 0
     def intern(key: Long): Int = {
-      var h = java.lang.Long.hashCode(key) & (tcap - 1)
+      var h = spread(key) & (tcap - 1)
       while (used(h) && keys(h) != key) h = (h + 1) & (tcap - 1)
       if (used(h)) idx(h)
       else {

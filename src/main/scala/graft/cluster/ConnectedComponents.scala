@@ -12,11 +12,16 @@ import org.apache.spark.sql.functions._
  * /opt/spark/jars (SURVEY.md §2.6 G2; BASELINE.json:6 "iterative
  * connected-components with checkpointed convergence").
  *
- * Each iteration is two groupBy+join rounds; convergence is O(log n)
- * iterations on adversarial graphs and 1-2 on near-clique dedupe
- * components. Every iteration is checkpointed to truncate lineage
- * (reliable checkpoint when a checkpoint dir is set — the resume
- * contract — else localCheckpoint).
+ * Size-adaptive: the edge set is normalized and materialized once, then
+ * a graph at or under [[oneTaskEdgeCap]] edges is labeled by one
+ * single-task union-find, and its round count comes from an in-task
+ * replay of the loop (SparkER's rule, EDBT 2019: keep per-job overhead
+ * out of small ER stages). Bigger graphs iterate: each iteration is two
+ * groupBy+join rounds; convergence is O(log n) iterations on adversarial
+ * graphs and 1-2 on near-clique dedupe components. Every iteration is
+ * checkpointed to truncate lineage (reliable checkpoint when a checkpoint
+ * dir is set — the resume contract — else localCheckpoint). Every job
+ * launched here carries the job description `graft: cc`.
  */
 object ConnectedComponents {
 
@@ -52,13 +57,17 @@ object ConnectedComponents {
    * @return labels (id, component) for every node APPEARING IN AN EDGE;
    *         component = min node id of the component. Callers add
    *         singletons by left-joining their vertex set (component := id).
+   *         `iterations` is the large-star/small-star round count, equal
+   *         on both sides of the one-task cap (replayed below it).
    */
-  def run(edges: DataFrame, maxIter: Int = 50): CCResult = {
-    val spark = edges.sparkSession
-    val e = Checkpoints.checkpointed(normalize(edges), spark)
-    val (fixpoint, iter) = loopToFixpoint(e, signature(e), spark, maxIter)
-    CCResult(labelsFromFixpoint(fixpoint), iter)
-  }
+  def run(edges: DataFrame, maxIter: Int = 50): CCResult =
+    runCapped(edges, maxIter, oneTaskEdgeCap)
+
+  /** [[run]] with the one-task cap as a parameter (-1 always iterates):
+    * the seam that lets a spec compare the replay with the loop. */
+  private[graft] def runCapped(edges: DataFrame, maxIter: Int, cap: Long): CCResult =
+    labelled(edges.sparkSession)(
+      ofSimple(cut(normalize(edges)), maxIter, cap, rounds = true))
 
   /** Canonical simple edge frame (u < v, no self-loops, distinct) of long
     * ids — so [[run]] and [[labels]] emit one label schema whatever the
@@ -69,6 +78,13 @@ object ConnectedComponents {
         greatest(col("u"), col("v")).cast("long").as("v"))
       .filter(col("u") =!= col("v"))
       .distinct()
+
+  private def cut(e: DataFrame): DataFrame =
+    Checkpoints.checkpointed(e, e.sparkSession)
+
+  /** Every job launched in `body` carries `graft: cc`. */
+  private def labelled[T](spark: SparkSession)(body: => T): T =
+    graft.io.Snapshot.labelJobs(spark, "graft: cc")(body)
 
   /** Alternating large-star/small-star rounds until the edge-set
     * signature stops moving; returns (fixpoint edges, rounds run). */
@@ -95,32 +111,23 @@ object ConnectedComponents {
       .union(e.select(col("v").as("id"), col("v").as("component")))
       .distinct()
 
-  /** Size-adaptive edge cap below which [[labels]] computes the whole
-    * labeling in ONE single-task union-find pass instead of iterating
-    * (~40 B/edge of task memory, so the cap bounds the task at
-    * ~80 MB). Not core-count-derived: the same cap is right on local[8]
-    * and on a 1000-executor cluster, because it bounds per-TASK memory,
-    * not parallelism. */
+  /** Size-adaptive edge cap at or under which one task labels the graph
+    * (union-find, ~40 B/edge) and replays its rounds (~40 B/edge, a
+    * separate task), so the cap bounds either task at ~80 MB. Not
+    * core-count-derived: the same cap is right on local[8] and on a
+    * 1000-executor cluster, because it bounds per-TASK memory, not
+    * parallelism. */
   private val oneTaskEdgeCap = 2000000L
 
   /**
-   * Labels-only transitive closure — identical output contract to
-   * [[run]].labels (component = min reachable id, edge-incident nodes
-   * only) WITHOUT the iteration-count observability, which buys a
-   * size-adaptive fast path: after the one normalize+materialize pass
-   * the edge count is known, and a graph at or under
-   * [[oneTaskEdgeCap]] edges is labeled by a single-task union-find
-   * (one job) instead of O(log n) large/small-star rounds of 2 jobs
-   * and ~6 shuffles each. Dedupe match graphs after thresholding are
-   * typically far smaller than their candidate-pair input, so this is
-   * the common case; anything bigger falls through to the identical
-   * iterative loop. Callers that report the round count (Dedupe's
-   * metrics path) keep using [[run]].
+   * Labels-only transitive closure — [[run]] without the round-count
+   * replay: the same normalize+materialize cut, the same single-task
+   * union-find at or under [[oneTaskEdgeCap]] edges and the same
+   * iterative loop above it.
    */
-  def labels(edges: DataFrame, maxIter: Int = 50): DataFrame = {
-    val spark = edges.sparkSession
-    labelsOfNormalized(Checkpoints.checkpointed(normalize(edges), spark), maxIter)
-  }
+  def labels(edges: DataFrame, maxIter: Int = 50): DataFrame =
+    labelled(edges.sparkSession)(
+      ofSimple(cut(normalize(edges)), maxIter, oneTaskEdgeCap, rounds = false).labels)
 
   /** [[labels]] over an ALREADY canonical+distinct simple edge frame
     * (two long columns, u < v) — callers that have paid the distinct
@@ -129,73 +136,96 @@ object ConnectedComponents {
     * checkpoint when the caller hands a frame it has checkpointed
     * itself (the frame is read twice here: size probe + labeling). */
   private[cluster] def labelsOfSimple(simple: DataFrame,
-      maxIter: Int = 50, alreadyMaterialized: Boolean = false): DataFrame = {
-    val spark = simple.sparkSession
-    val e = simple.toDF("u", "v")
-    labelsOfNormalized(
-      if (alreadyMaterialized) e else Checkpoints.checkpointed(e, spark), maxIter)
-  }
+      maxIter: Int = 50, alreadyMaterialized: Boolean = false): DataFrame =
+    labelled(simple.sparkSession) {
+      val e = simple.toDF("u", "v")
+      ofSimple(if (alreadyMaterialized) e else cut(e), maxIter, oneTaskEdgeCap,
+        rounds = false).labels
+    }
 
-  private def labelsOfNormalized(e0: DataFrame, maxIter: Int): DataFrame = {
+  /** The one kernel over a materialized simple edge frame. `rounds = false`
+    * skips the replay job and reports -1 iterations below the cap. */
+  private def ofSimple(e0: DataFrame, maxIter: Int, cap: Long,
+      rounds: Boolean): CCResult = {
     // both paths emit long labels regardless of the input's numeric type
     // (the iterative path would otherwise preserve e.g. int columns while
     // the one-task kernel casts — schema must not depend on graph size)
     val e = e0.select(col("u").cast("long").as("u"), col("v").cast("long").as("v"))
     val spark = e.sparkSession
     val sig = signature(e)
-    if (sig._1 <= oneTaskEdgeCap) singleTaskLabels(e, sig._1)
-    else labelsFromFixpoint(loopToFixpoint(e, sig, spark, maxIter)._1)
+    if (sig._1 <= cap)
+      CCResult(singleTaskLabels(e, sig._1),
+        if (rounds) replayedRounds(e, sig._1, maxIter) else -1)
+    else {
+      val (fixpoint, iter) = loopToFixpoint(e, sig, spark, maxIter)
+      CCResult(labelsFromFixpoint(fixpoint), iter)
+    }
+  }
+
+  /** Coalesce(1): a narrow read of the materialized edge frame into one
+    * task, handed `f` as the edge iterator and the known edge count. */
+  private def inOneTask[T: org.apache.spark.sql.Encoder](e: DataFrame, edgeCount: Long)(
+      f: (Iterator[(Long, Long)], Int) => Iterator[T]): org.apache.spark.sql.Dataset[T] = {
+    val spark = e.sparkSession
+    import spark.implicits._
+    val m = math.toIntExact(edgeCount)
+    e.as[(Long, Long)].coalesce(1).mapPartitions(it => f(it, m))
   }
 
   /** One-task union-find labeling (path-halving find + size union, then
     * a min-id sweep per root so labels carry the exact min-reachable-id
     * contract — the result is independent of edge order). Only reached
-    * at or under [[oneTaskEdgeCap]] edges, so the arrays are bounded;
-    * coalesce(1) is a narrow read of the materialized edge frame. */
+    * at or under [[oneTaskEdgeCap]] edges, so the arrays are bounded. */
   private def singleTaskLabels(e: DataFrame, edgeCount: Long): DataFrame = {
     val spark = e.sparkSession
     import spark.implicits._
-    val m = math.toIntExact(math.max(1L, edgeCount))
-    e.select(col("u").cast("long"), col("v").cast("long"))
-      .as[(Long, Long)]
-      .coalesce(1)
-      .mapPartitions { it =>
-        val interner = new ComponentGraphs.Interner(m)
-        val parent = new Array[Int](2 * m)
-        val size = new Array[Int](2 * m)
-        var inited = 0
-        def intern(id: Long): Int = {
-          val idx = interner.intern(id)
-          while (inited < interner.n) {
-            parent(inited) = inited; size(inited) = 1; inited += 1
-          }
-          idx
+    inOneTask(e, edgeCount) { (it, m0) =>
+      val m = math.max(1, m0)
+      val interner = new ComponentGraphs.Interner(m)
+      val parent = new Array[Int](2 * m)
+      val size = new Array[Int](2 * m)
+      var inited = 0
+      def intern(id: Long): Int = {
+        val idx = interner.intern(id)
+        while (inited < interner.n) {
+          parent(inited) = inited; size(inited) = 1; inited += 1
         }
-        def find(x0: Int): Int = {
-          var x = x0
-          while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
-          x
-        }
-        it.foreach { case (u, v) =>
-          val ru = find(intern(u)); val rv = find(intern(v))
-          if (ru != rv) {
-            val (hi, lo) = if (size(ru) >= size(rv)) (ru, rv) else (rv, ru)
-            parent(lo) = hi; size(hi) += size(lo)
-          }
-        }
-        val n = interner.n
-        // min node id per root = the component label
-        val minId = new Array[Long](n)
-        java.util.Arrays.fill(minId, Long.MaxValue)
-        var i = 0
-        while (i < n) {
-          val r = find(i)
-          if (interner.nodeId(i) < minId(r)) minId(r) = interner.nodeId(i)
-          i += 1
-        }
-        (0 until n).iterator.map(x => (interner.nodeId(x), minId(find(x))))
+        idx
       }
-      .toDF("id", "component")
+      def find(x0: Int): Int = {
+        var x = x0
+        while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+        x
+      }
+      it.foreach { case (u, v) =>
+        val ru = find(intern(u)); val rv = find(intern(v))
+        if (ru != rv) {
+          val (hi, lo) = if (size(ru) >= size(rv)) (ru, rv) else (rv, ru)
+          parent(lo) = hi; size(hi) += size(lo)
+        }
+      }
+      val n = interner.n
+      // min node id per root = the component label
+      val minId = new Array[Long](n)
+      java.util.Arrays.fill(minId, Long.MaxValue)
+      var i = 0
+      while (i < n) {
+        val r = find(i)
+        if (interner.nodeId(i) < minId(r)) minId(r) = interner.nodeId(i)
+        i += 1
+      }
+      (0 until n).iterator.map(x => (interner.nodeId(x), minId(find(x))))
+    }.toDF("id", "component")
+  }
+
+  /** The round count [[loopToFixpoint]] would report on this edge frame,
+    * from one single-task job (an empty frame may have no partition, so
+    * no task: its replay runs on the driver). */
+  private def replayedRounds(e: DataFrame, edgeCount: Long, maxIter: Int): Int = {
+    val spark = e.sparkSession
+    import spark.implicits._
+    inOneTask(e, edgeCount)((it, m) => Iterator.single(StarReplay.rounds(it, m, maxIter)))
+      .collect().headOption.getOrElse(StarReplay.rounds(Iterator.empty, 0, maxIter))
   }
 
   /** Cheap fixpoint detector: (edge count, order-independent hash xor) —

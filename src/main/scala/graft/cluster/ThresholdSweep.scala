@@ -148,14 +148,14 @@ object ThresholdSweep {
             var s = 0
             while (s < ok.length) {
               if (ou(s)) {
-                var h = java.lang.Long.hashCode(ok(s)) & (cap - 1)
+                var h = ComponentGraphs.spread(ok(s)) & (cap - 1)
                 while (slotUsed(h)) h = (h + 1) & (cap - 1)
                 keys(h) = ok(s); slotUsed(h) = true; slotIdx(h) = oi(s)
               }
               s += 1
             }
           }
-          var h = java.lang.Long.hashCode(key) & (cap - 1)
+          var h = ComponentGraphs.spread(key) & (cap - 1)
           while (slotUsed(h) && keys(h) != key) h = (h + 1) & (cap - 1)
           if (slotUsed(h)) slotIdx(h)
           else {

@@ -118,14 +118,21 @@ private[graft] object Snapshot {
         df
       case Some(path) =>
         val sc = spark.sparkContext
-        val prev = sc.getLocalProperty("spark.job.description")
-        sc.setJobDescription(s"graft: $tag snapshot")
-        try df.write.mode("overwrite").parquet(path.toString)
-        finally sc.setJobDescription(prev)
+        labelJobs(spark, s"graft: $tag snapshot")(
+          df.write.mode("overwrite").parquet(path.toString))
         scope.taken(Right((path.getFileSystem(sc.hadoopConfiguration), path)))
         val back = reader.getOrElse(spark).read.parquet(path.toString)
         if (widen) Snapshot.widen(back) else back
     }
+  }
+
+  /** Run `body` with its jobs described as `label`, then restore the
+    * caller's job description. */
+  def labelJobs[T](spark: SparkSession, label: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(label)
+    try body finally sc.setJobDescription(prev)
   }
 
   /** Scan-parallelism floor for a parquet read-back: a snapshot written as

@@ -26,7 +26,9 @@ import graft.score.Scoring
  *  3. scoring is flat-column Catalyst arithmetic — one codegen span.
  *  4. scored pairs are the resume point: persisted to parquet when a
  *     checkpoint dir is configured (BASELINE.json:6 resumability).
- *  5. clustering = thresholded edges → large/small-star CC (checkpointed).
+ *  5. clustering = thresholded edges → connected components: one
+ *     single-task union-find (round count replayed in-task) up to 2 M
+ *     edges, checkpointed large/small-star rounds above.
  *
  * The `text` column is never rewritten — derived columns only
  * (byte-identity invariant, BASELINE.json:6,15).
@@ -38,7 +40,8 @@ object Dedupe {
       maxBlockSize: Int = 200,
       checkpointDir: Option[String] = None,
       canonFields: Seq[String] = Seq("url", "text_norm", "lang"),
-      // metrics cost extra actions (counts); off for latency-sensitive runs
+      // metrics cost extra aggregate jobs (block census, record, pair,
+      // edge and entity counts); the CC round count comes either way
       collectMetrics: Boolean = true)
 
   case class Result(
@@ -329,12 +332,7 @@ object Dedupe {
     // ---- stage 4: threshold + transitive closure (G2)
     val edges = scored.filter(col("score") >= model.threshold)
       .select(col("id1"), col("id2"))
-    // the metrics path reports the CC round count (q_lineage pins it), so
-    // it keeps run(); metrics-off runs take the size-adaptive labels path
-    // (identical labels, no round-count observability)
-    val cc =
-      if (config.collectMetrics) ConnectedComponents.run(edges)
-      else ConnectedComponents.CCResult(ConnectedComponents.labels(edges), -1)
+    val cc = ConnectedComponents.run(edges)
     val repLabels = reps.select(col("id"))
       .join(cc.labels, Seq("id"), "left")
       .select(col("id").as("rep"),
@@ -343,11 +341,11 @@ object Dedupe {
     // ---- stage 5: expand exact groups, confidence, canon
     // narrow (id, component) snapshot: confidences, the entity map, canon
     // and the entity count are independent actions — each would re-run the
-    // expand join (and the CC label union+distinct behind it) otherwise
+    // expand join (and the CC labeling task behind it) otherwise
     val allLabels = Snapshot(idToRep.join(repLabels, "rep")
       .select(col("id"), col("component")), "labels", scratch, widen = true)
-    // S5: lineage of the clustering output too (CC iterations checkpoint
-    // under $dir/cc; this records what the final labels looked like)
+    // S5: lineage of the clustering output too (CC checkpoints go under
+    // $dir/cc; this records what the final labels looked like)
     config.checkpointDir.foreach(dir => writeLineage(dir, "labels", allLabels))
     val conf = Canonicalize.confidences(
       allLabels, scored.select(col("id1"), col("id2"), col("score")))

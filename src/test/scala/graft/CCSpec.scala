@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.functions._
 import graft.cluster.ConnectedComponents
 
 /** F7 fixtures: hand-built edge lists → expected components. */
@@ -107,6 +108,22 @@ class CCSpec extends SparkSpec {
     assert(capped(1L) == capped(2L))
     assert(Set(capped(3L), capped(4L), capped(5L)).size == 3)
     assert(capped(3L) != capped(1L))
+  }
+
+  test("ids with zero low bits intern in linear time: a path over 2^18 " +
+      "ids of the form i << 20 labels within a loose bound") {
+    // Long.hashCode(i << 20) masked to the 2^20-slot table leaves 64
+    // adjacent home slots for 2^18 ids: unmixed, linear probing turns
+    // quadratic (67 s on a 4-core host; under 1 s mixed)
+    val n = 1L << 18
+    val path = spark.range(0, n - 1)
+      .select(shiftleft($"id", 20).as("id1"), shiftleft($"id" + 1, 20).as("id2"))
+    val t0 = System.nanoTime()
+    val r = ConnectedComponents.labels(path)
+      .agg(count(lit(1)), min($"component"), max($"component")).collect()(0)
+    val sec = (System.nanoTime() - t0) / 1e9
+    assert(r.getLong(0) == n && r.getLong(1) == 0L && r.getLong(2) == 0L, r)
+    assert(sec < 20.0, f"labeling took $sec%.1f s")
   }
 
   test("run().labels and labels() share one long label schema on int ids") {
